@@ -413,10 +413,10 @@ def refresh_rollup(
             ]
         )
     )
-    # r15 (VERDICT r14 #6): the bounds probe rides the delta pin
-    # (named observe; see operators/_obs.py for why not pyspark
-    # Observation) — one action per refresh where there were two
-    # (pin, then a separate agg job over the checkpointed delta).
+    # The bounds probe rides the delta pin (named observe; see
+    # operators/_obs.py for why not pyspark Observation), so the pin
+    # and the probe are one action rather than a pin plus a separate
+    # agg job over the checkpointed delta.
     k0 = keys[0]
     delta, b = checkpoint_with_metrics(  # CDF replay is iterative; pin it
         delta,
@@ -671,9 +671,9 @@ def _apply_delta(old: DataFrame, delta, keys, sum_cols, minmax_cols, st, recompu
         F.col("n_rows") > 0
     )
     if minmax_cols:
-        # r15: the unsafe-group probe rides the pin action (named
-        # observe; see operators/_obs.py) — the split used to pay a
-        # separate isEmpty() job on the frame it had just pinned.
+        # The unsafe-group probe rides the pin action (named observe;
+        # see operators/_obs.py), so the split needs no separate
+        # isEmpty() job on the frame it has just pinned.
         updated, m = checkpoint_with_metrics(  # split reuses it
             updated,
             "ivm_unsafe_probe",

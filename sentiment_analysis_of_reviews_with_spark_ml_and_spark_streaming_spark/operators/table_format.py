@@ -59,6 +59,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import StructType
 
+from ._obs import checkpoint_with_metrics
+
 _LOG = "_log"
 
 
@@ -374,8 +376,9 @@ def _write_data_files(
     fast = _footer_adds(out_dir, rel, stat_cols)
     if fast is not None:
         return sorted(fast, key=lambda a: a["path"])
-    spark = df.sparkSession
-    written = spark.read.parquet(out_dir)
+    # the written schema is known: passing it skips the footer-reading
+    # schema inference job
+    written = df.sparkSession.read.schema(df.schema).parquet(out_dir)
     aggs = [F.count(F.lit(1)).alias("_rows")]
     for c in stat_cols:
         aggs += [F.min(c).alias(f"_min_{c}"), F.max(c).alias(f"_max_{c}")]
@@ -423,9 +426,6 @@ def _abs_paths(root: str, adds: list[dict]) -> list[str]:
 # --------------------------------------------------------------------------
 # deletion vectors (merge-on-read)
 
-_DV_SCHEMA = "file string, pos long"
-
-
 def _file_base_col():
     return F.element_at(
         F.split(F.col("_metadata.file_path"), "/"), -1
@@ -436,51 +436,101 @@ def _row_pos_col():
     return F.col("_metadata.row_index").alias("_pos")
 
 
-def _write_dv_sidecar(dv_df: DataFrame, root: str, version: int) -> str:
-    """Persist cumulative ``(file, pos)`` deletion pairs as ONE parquet
-    sidecar under ``data/`` (so vacuum's walk governs it like any data
-    file) and return its relative path. DV rows are churn-bounded —
-    mass deletes belong in copy-on-write mode — so one file suffices."""
-    rel_dir = f"data/v{version:08d}-dv-{uuid.uuid4().hex[:8]}"
-    out = os.path.join(root, rel_dir)
-    dv_df.coalesce(1).write.mode("error").parquet(out)
-    part = [f for f in os.listdir(out) if f.endswith(".parquet")]
-    return os.path.join(rel_dir, part[0])
+def _sidecar_path(root: str, entry: dict) -> str | None:
+    """Absolute path of the sidecar a live entry's DV points at, if any."""
+    dv = entry.get("dv")
+    return os.path.join(root, dv["sidecar"]) if dv else None
+
+
+def _dv_positions(sidecar: str | None, base: str):
+    """The deleted row positions (sorted int64 numpy array) that the
+    sidecar at absolute path ``sidecar`` holds for data file ``base``
+    (basename); empty for ``None``. Plain pyarrow, no Spark job — the
+    one reader of per-file DV positions, shared by the writers, the
+    change feed and the streaming source's workers."""
+    import numpy as np
+
+    if sidecar is None:
+        return np.empty(0, dtype=np.int64)
+    import pyarrow.parquet as pq
+
+    t = pq.read_table(sidecar, columns=["pos"], filters=[("file", "=", base)])
+    return np.sort(t.column("pos").to_numpy().astype(np.int64))
+
+
+def _dv_table(positions: dict):
+    """Per-file position arrays as one ``(file, pos)`` Arrow table —
+    the sidecar layout."""
+    import numpy as np
+    import pyarrow as pa
+
+    bases = sorted(positions)
+    return pa.table({
+        "file": pa.array(
+            np.repeat(np.array(bases, dtype=object),
+                      [len(positions[b]) for b in bases]),
+            pa.string(),
+        ),
+        "pos": pa.array(
+            np.concatenate([np.empty(0, np.int64)]
+                           + [positions[b] for b in bases]),
+            pa.int64(),
+        ),
+    })
+
+
+def _write_dv_mask(
+    matched: DataFrame, root: str, version: int, cands: list[dict]
+) -> tuple[list[dict], dict]:
+    """Mask the ``(_file, _pos)`` rows of ``matched`` — live rows of
+    ``cands`` — with deletion vectors: the MoR write path of every DML.
+    One Spark action collects the pairs through Arrow; the rest runs on
+    the driver. A file whose every row is now masked is removed
+    outright; the others' prior positions are unioned with the new ones
+    into ONE cumulative sidecar, written with pyarrow under ``data/`` so
+    vacuum's walk governs it like any data file. DV rows are
+    churn-bounded (mass deletes belong in copy-on-write mode), so the
+    pairs fit the driver. Returns (entries to remove, the commit's
+    ``dv`` map); both are empty when nothing matched."""
+    import numpy as np
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    pairs = matched.select("_file", "_pos").toArrow()
+    by_base = {os.path.basename(a["path"]): a for a in cands}
+    u = uuid.uuid4().hex[:8]
+    sidecar = f"data/v{version:08d}-dv-{u}/dv-{u}.parquet"
+    files = pairs.column("_file")
+    full, dv_map, cum = [], {}, {}
+    for base in sorted(pc.unique(files).to_pylist()):
+        a = by_base[base]
+        new = pairs.column("_pos").filter(pc.equal(files, base)).to_numpy()
+        if a.get("dv", {}).get("rows", 0) + len(new) == a["rows"]:
+            full.append(a)
+            continue
+        cum[base] = np.union1d(_dv_positions(_sidecar_path(root, a), base), new)
+        dv_map[a["path"]] = {"sidecar": sidecar, "rows": len(cum[base])}
+    if cum:
+        out = os.path.join(root, sidecar)
+        os.makedirs(os.path.dirname(out))
+        pq.write_table(_dv_table(cum), out)
+    return full, dv_map
 
 
 def _dv_rows(spark: SparkSession, root: str, entries: list[dict]) -> DataFrame:
-    """The valid ``(file basename, pos)`` deletion pairs for these live
-    entries. A sidecar is shared by every file its commit touched, and
-    a LATER delete rewrites a file's cumulative rows into a NEW sidecar
-    — so a pair only counts when it came from the sidecar the entry
-    currently points at (join on both file and sidecar identity)."""
-    pairs = sorted(
-        {
-            (os.path.basename(e["path"]), e["dv"]["sidecar"])
-            for e in entries
-            if "dv" in e
-        }
-    )
-    if not pairs:
-        return spark.createDataFrame([], _DV_SCHEMA)
-    sidecars = sorted({s for _, s in pairs})
-    raw = (
-        spark.read.schema(_DV_SCHEMA)
-        .parquet(*(os.path.join(root, s) for s in sidecars))
-        .select(
-            "file",
-            "pos",
-            F.element_at(
-                F.split(F.col("_metadata.file_path"), "/"), -1
-            ).alias("_sc"),
+    """The ``(file basename, pos)`` deletion pairs of these live
+    entries, read on the driver and handed to Spark as a local relation
+    (no Spark job). Each entry's positions come from the sidecar it
+    currently points at: a sidecar is shared by every file its commit
+    touched, and a LATER commit rewrites a file's cumulative rows into a
+    NEW sidecar, so older sidecars are never consulted."""
+    return spark.createDataFrame(_dv_table({
+        os.path.basename(e["path"]): _dv_positions(
+            _sidecar_path(root, e), os.path.basename(e["path"])
         )
-    )
-    lookup = spark.createDataFrame(
-        [(f, os.path.basename(s)) for f, s in pairs], "file string, _sc string"
-    )
-    return raw.join(F.broadcast(lookup), ["file", "_sc"], "inner").select(
-        "file", "pos"
-    )
+        for e in entries
+        if "dv" in e
+    }))
 
 
 def _meta_schema(st: StructType) -> StructType:
@@ -824,24 +874,31 @@ def merge_upsert(
         )
     if batch_id is not None and batch_id in committed_batch_ids(root):
         return latest_version(root)
-    # r14: pin the batch ONCE — the merge evaluates `updates` four
-    # times (dup check, bounds, exact-key collect, the merge itself),
-    # and a caller-provided pipeline (filter over a scan, a join...)
-    # otherwise re-runs per action (guide §1.2). O(batch) bytes, the
-    # quantity MERGE is already proportional to.
-    updates = updates.localCheckpoint(eager=True)
-    # NULL keys are excluded from the uniqueness check: a NULL source
-    # key never equi-matches a target row (SQL join semantics), so any
-    # number of NULL-key rows are plain inserts, as in Delta's
-    # whenNotMatched.
-    dup = (
-        updates.filter(F.col(key_col).isNotNull())
-        .groupBy(key_col)
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .filter("_n > 1")
-        .limit(1)
-        .collect()
+    # Pin the batch once: the merge reads `updates` several times, and a
+    # caller-provided pipeline (filter over a scan, a join...) would
+    # otherwise re-run per action. O(batch) bytes, the quantity MERGE is
+    # already proportional to. Size and key range ride the pin's job.
+    updates, b = checkpoint_with_metrics(
+        updates,
+        "merge_batch",
+        F.count(F.lit(1)).alias("n"),
+        F.min(key_col).alias("lo"),
+        F.max(key_col).alias("hi"),
     )
+    if b["n"] == 0:  # truly empty update batch: no-op, no commit
+        return latest_version(root)
+    # One bounded grouped collect answers both the duplicate-key check
+    # and the exact key set. NULL keys are left out of both: a NULL
+    # source key never equi-matches a target row (SQL join semantics),
+    # so any number of NULL-key rows are plain inserts, as in Delta's
+    # whenNotMatched.
+    non_null = updates.filter(F.col(key_col).isNotNull())
+    per_key = non_null.groupBy(key_col).agg(F.count(F.lit(1)).alias("_n"))
+    key_rows = per_key.limit(10_001).collect()
+    if len(key_rows) <= 10_000:
+        dup = [r for r in key_rows if r["_n"] > 1]
+    else:  # the bounded collect saw only part of the batch
+        dup = per_key.filter("_n > 1").limit(1).collect()
     if dup:
         raise ValueError(
             f"updates batch has multiple rows for {key_col}="
@@ -850,32 +907,28 @@ def merge_upsert(
         )
     if meta.get("checks"):
         _enforce_checks(updates, meta["checks"])
-    b = updates.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.min(key_col).alias("lo"),
-        F.max(key_col).alias("hi"),
-    ).collect()[0]
-    if b["n"] == 0:  # truly empty update batch: no-op, no commit
-        return latest_version(root)
-    # lo/hi None with n > 0 means every key is NULL: nothing can
-    # equi-match, the whole batch is inserts (candidates prune to zero
-    # via the empty exact-key set below).
-    lo, hi = _json_stat(b["lo"]), _json_stat(b["hi"])
-    # exact batch keys (bounded collect): per-value stats overlap prunes
-    # sparse upserts far harder than the [lo, hi] hull — two keys at the
-    # domain's ends touch 2 files, not every file between them.
-    key_rows = updates.select(key_col).distinct().limit(10_001).collect()
-    key_vals = (
-        [_json_stat(r[key_col]) for r in key_rows if r[key_col] is not None]
-        if len(key_rows) <= 10_000
-        else None
-    )
+    # Exact batch keys: per-value stats overlap prunes sparse upserts
+    # far harder than the [lo, hi] hull — two keys at the domain's ends
+    # touch 2 files, not every file between them. Past 10,000 keys the
+    # hull is used. An all-NULL batch has no keys, so candidates prune
+    # to zero and the whole batch is inserts.
+    bounds: dict[str, tuple] = {}
+    key_vals = None
+    if len(key_rows) <= 10_000:
+        key_vals = [_json_stat(r[key_col]) for r in key_rows]
+    else:
+        lo, hi = b["lo"], b["hi"]
+        if not all(isinstance(x, (int, float, str, bool)) for x in (lo, hi)):
+            # observed dates/timestamps arrive as JVM objects, whose
+            # rendering differs from the stats' isoformat
+            lo, hi = updates.agg(F.min(key_col), F.max(key_col)).first()
+        bounds[key_col] = (_json_stat(lo), _json_stat(hi))
     for _ in range(max_retries):
         base_v = latest_version(root)
         live, _schema = snapshot_files(root, base_v)
         st = StructType.fromJson(_schema)
         cands, _rest = _candidate_files(
-            live, {key_col: (lo, hi)}, key_col, values=key_vals
+            live, bounds, key_col, values=key_vals
         )
         v = base_v + 1
         rec = {"version": v, "action": "merge", "schema": None,
@@ -903,49 +956,16 @@ def merge_upsert(
                 updates.select([f.name for f in st.fields]),
                 root, v, meta["stat_cols"],
             )
-            full, partial, dv_map = [], [], {}
+            full, dv_map = [], {}
             if cands:
-                displaced = (
-                    read_files(spark, root, cands, st, with_meta=True)
-                    .join(
-                        F.broadcast(updates.select(key_col).distinct()),
-                        on=key_col,
-                        how="left_semi",
-                    )
-                    .select("_file", "_pos")
-                    .localCheckpoint(eager=True)  # counts + sidecar reuse
+                displaced = read_files(
+                    spark, root, cands, st, with_meta=True
+                ).join(
+                    F.broadcast(updates.select(key_col)),
+                    on=key_col,
+                    how="left_semi",
                 )
-                by_base = {os.path.basename(a["path"]): a for a in cands}
-                per_file = {
-                    r["_file"]: r["_n"]
-                    for r in displaced.groupBy("_file")
-                    .agg(F.count(F.lit(1)).alias("_n"))
-                    .collect()
-                }
-                for base, n_new in per_file.items():
-                    a = by_base[base]
-                    n_total = a.get("dv", {}).get("rows", 0) + n_new
-                    (full if n_total == a["rows"] else partial).append(a)
-                if partial:
-                    partial_bases = [
-                        os.path.basename(a["path"]) for a in partial
-                    ]
-                    cum = displaced.filter(
-                        F.col("_file").isin(partial_bases)
-                    ).select(
-                        F.col("_file").alias("file"), F.col("_pos").alias("pos")
-                    )
-                    prior = [a for a in partial if "dv" in a]
-                    if prior:
-                        cum = cum.unionByName(_dv_rows(spark, root, prior))
-                    sidecar = _write_dv_sidecar(cum, root, v)
-                    for a in partial:
-                        base = os.path.basename(a["path"])
-                        dv_map[a["path"]] = {
-                            "sidecar": sidecar,
-                            "rows": a.get("dv", {}).get("rows", 0)
-                            + per_file[base],
-                        }
+                full, dv_map = _write_dv_mask(displaced, root, v, cands)
             rec["add"] = mor_adds
             rec["remove"] = [a["path"] for a in full]
             rec["dv"] = dv_map
@@ -1214,20 +1234,15 @@ def _delete_attempt(
     # by an earlier merge-on-read commit can't match again.
     tagged = read_files(spark, root, cands, st, with_meta=True)
     matched = tagged.filter(predicate).select("_file", "_pos")
-    if mode == "mor":
-        # pin once: the per-file counts job AND the sidecar write both
-        # consume `matched` (same pattern as merge/update mor paths)
-        matched = matched.localCheckpoint(eager=True)
-    by_base = {os.path.basename(a["path"]): a for a in cands}
-
+    v = base_v + 1
     if mode == "cow":
+        by_base = {os.path.basename(a["path"]): a for a in cands}
         matched_bases = {
             r["_file"] for r in matched.select("_file").distinct().collect()
         }
         if not matched_bases:
             return base_v
         hit = [by_base[b] for b in sorted(matched_bases)]
-        v = base_v + 1
         # NOT(pred) alone would also drop rows where pred is NULL
         # (three-valued logic) — only TRUE rows are deleted, so keep
         # everything that is not definitely matched.
@@ -1246,37 +1261,9 @@ def _delete_attempt(
         return v
 
     # --- merge-on-read ---
-    per_file = {
-        r["_file"]: r["_n"]
-        for r in matched.groupBy("_file")
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .collect()
-    }
-    if not per_file:
+    full, dv_map = _write_dv_mask(matched, root, v, cands)
+    if not full and not dv_map:
         return base_v
-    full, partial = [], []
-    for base, n_new in per_file.items():
-        a = by_base[base]
-        n_total = a.get("dv", {}).get("rows", 0) + n_new
-        (full if n_total == a["rows"] else partial).append(a)
-    v = base_v + 1
-    dv_map: dict[str, dict] = {}
-    if partial:
-        partial_bases = [os.path.basename(a["path"]) for a in partial]
-        # cumulative sidecar: new matches + the files' prior DV rows
-        cum = matched.filter(F.col("_file").isin(partial_bases)).select(
-            F.col("_file").alias("file"), F.col("_pos").alias("pos")
-        )
-        prior = [a for a in partial if "dv" in a]
-        if prior:
-            cum = cum.unionByName(_dv_rows(spark, root, prior))
-        sidecar = _write_dv_sidecar(cum, root, v)
-        for a in partial:
-            base = os.path.basename(a["path"])
-            dv_map[a["path"]] = {
-                "sidecar": sidecar,
-                "rows": a.get("dv", {}).get("rows", 0) + per_file[base],
-            }
     _write_commit(
         root,
         v,
@@ -1351,10 +1338,10 @@ def _update_attempt(
         return base_v
     tagged = read_files(spark, root, cands, st, with_meta=True)
     matched = tagged.filter(predicate)
-    by_base = {os.path.basename(a["path"]): a for a in cands}
     v = base_v + 1
 
     if mode == "cow":
+        by_base = {os.path.basename(a["path"]): a for a in cands}
         matched_bases = {
             r["_file"]
             for r in matched.select("_file").distinct().collect()
@@ -1383,39 +1370,16 @@ def _update_attempt(
         return v
 
     # --- merge-on-read: mask old versions, append new versions ---
-    matched = matched.localCheckpoint(eager=True)  # mask + rewrite reuse
-    per_file = {
-        r["_file"]: r["_n"]
-        for r in matched.groupBy("_file")
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .collect()
-    }
-    if not per_file:
+    matched, m = checkpoint_with_metrics(  # mask + rewrite reuse
+        matched, "update_matched", F.count(F.lit(1)).alias("n")
+    )
+    if m["n"] == 0:
         return base_v
     updated = _apply(matched.drop("_file", "_pos"))
     if meta.get("checks"):
         _enforce_checks(updated, meta["checks"])
     adds = _write_data_files(updated, root, v, meta["stat_cols"])
-    full, partial, dv_map = [], [], {}
-    for base, n_new in per_file.items():
-        a = by_base[base]
-        n_total = a.get("dv", {}).get("rows", 0) + n_new
-        (full if n_total == a["rows"] else partial).append(a)
-    if partial:
-        partial_bases = [os.path.basename(a["path"]) for a in partial]
-        cum = matched.filter(F.col("_file").isin(partial_bases)).select(
-            F.col("_file").alias("file"), F.col("_pos").alias("pos")
-        )
-        prior = [a for a in partial if "dv" in a]
-        if prior:
-            cum = cum.unionByName(_dv_rows(spark, root, prior))
-        sidecar = _write_dv_sidecar(cum, root, v)
-        for a in partial:
-            base = os.path.basename(a["path"])
-            dv_map[a["path"]] = {
-                "sidecar": sidecar,
-                "rows": a.get("dv", {}).get("rows", 0) + per_file[base],
-            }
+    full, dv_map = _write_dv_mask(matched, root, v, cands)
     _write_commit(
         root,
         v,
@@ -1611,20 +1575,22 @@ def table_changes(
     added/removed files. Every data file is immutable parquet, so the
     feed is deterministic and replayable from any version.
 
-    Deletion-vector commits (``delete_where(mode="mor")``) emit exactly
-    the NEWLY masked rows: the commit's cumulative sidecar minus the
-    file's prior sidecar gives the fresh positions, and the data file
-    is read once at those positions. A later REMOVE of a DV'd file
-    (compact, merge, cow delete) reads it through its pre-commit DV, so
-    rows already reported deleted are never reported twice — the feed
-    stays an exact multiset delta of the logical table at every
-    version."""
+    Deletion-vector commits (``mode="mor"`` merge, delete and update)
+    emit exactly the NEWLY masked rows: the commit's cumulative sidecar
+    minus the file's prior sidecar, diffed on the driver, gives the
+    fresh positions, and the data file is read once at those positions.
+    A later REMOVE of a DV'd file (compact, merge, cow delete) reads it
+    through its pre-commit DV, so rows already reported deleted are
+    never reported twice — the feed stays an exact multiset delta of
+    the logical table at every version."""
     head = latest_version(root)
     if not 0 <= v_from < v_to <= head:
         raise ValueError(
             f"need 0 <= v_from < v_to <= head({head}), "
             f"got ({v_from}, {v_to}]"
         )
+    import numpy as np
+
     _live, schema = snapshot_files(root, v_to)
     st = StructType.fromJson(schema)
     base_cols = [F.col(f.name) for f in st.fields]
@@ -1650,8 +1616,8 @@ def table_changes(
         # add+remove commits (merge, compact, cow delete rewrites) need
         # the cancellation; append-only and remove-only commits get the
         # identity short-circuit (exceptAll with an empty side IS the
-        # other side), which removed ~2 s per append fold from every
-        # IVM refresh at sf0.1 (r13 latency campaign)
+        # other side), so an append fold into an IVM refresh pays no
+        # shuffle
         action = rec.get("action")
         if not removed_entries:
             d = added.withColumn("_change_type", F.lit("inserted"))
@@ -1681,31 +1647,25 @@ def table_changes(
                     .withColumn("_change_type", F.lit("deleted"))
                 )
             )
-        dv_items = rec.get("dv", {})
-        if dv_items:
-            new_entries = [
-                {**pre[p], "dv": {"sidecar": d2["sidecar"], "rows": d2["rows"]}}
-                for p, d2 in dv_items.items()
-                if p in pre
-            ]
-            fresh = _dv_rows(spark, root, new_entries)
-            old_dvd = [pre[p] for p in dv_items if "dv" in pre.get(p, {})]
-            if old_dvd:
-                fresh = fresh.join(
-                    _dv_rows(spark, root, old_dvd), ["file", "pos"], "left_anti"
-                )
-            # read the affected files WITHOUT their (new) DV, positions on
-            bare = [
-                {k: val for k, val in pre[p].items() if k != "dv"}
-                for p in dv_items
-                if p in pre
-            ]
+        dv_items = {p: d2 for p, d2 in rec.get("dv", {}).items() if p in pre}
+        # rows newly masked by this commit: new sidecar − old sidecar,
+        # diffed on the driver and handed to Spark as a local relation
+        fresh = {}
+        for p, d2 in dv_items.items():
+            base = os.path.basename(p)
+            fresh[base] = np.setdiff1d(
+                _dv_positions(os.path.join(root, d2["sidecar"]), base),
+                _dv_positions(_sidecar_path(root, pre[p]), base),
+            )
+        fresh = _dv_table(fresh)
+        if fresh.num_rows:
+            # read the affected files WITHOUT their DV, positions on
             data = spark.read.schema(st).parquet(
-                *_abs_paths(root, bare)
+                *(os.path.join(root, p) for p in dv_items)
             ).select(*base_cols, _file_base_col(), _row_pos_col())
             masked = (
                 data.join(
-                    F.broadcast(fresh),
+                    F.broadcast(spark.createDataFrame(fresh)),
                     (F.col("_file") == F.col("file"))
                     & (F.col("_pos") == F.col("pos")),
                     "left_semi",

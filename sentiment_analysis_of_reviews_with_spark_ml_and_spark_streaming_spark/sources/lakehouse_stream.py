@@ -99,13 +99,8 @@ def _read_file_batches(
     if dv_sidecar:
         import numpy as np
 
-        import pyarrow.compute as pc
-
-        dvt = pq.read_table(dv_sidecar)
-        mine = dvt.filter(pc.equal(dvt.column("file"), os.path.basename(path)))
-        pos = mine.column("pos").to_numpy(zero_copy_only=False)
         mask = np.ones(tbl.num_rows, dtype=bool)
-        mask[pos.astype(np.int64)] = False
+        mask[tf._dv_positions(dv_sidecar, os.path.basename(path))] = False
         tbl = tbl.filter(pa.array(mask))
     n = tbl.num_rows
     cols = []
@@ -185,20 +180,6 @@ class _CdfPartition(InputPartition):
         self.dv_old = dv_old
 
 
-def _dv_positions(sidecar: str | None, base: str):
-    """The deleted row positions a sidecar holds for ``base`` (numpy)."""
-    import numpy as np
-
-    if sidecar is None:
-        return np.empty(0, dtype=np.int64)
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
-    t = pq.read_table(sidecar)
-    mine = t.filter(pc.equal(t.column("file"), base))
-    return mine.column("pos").to_numpy(zero_copy_only=False).astype("int64")
-
-
 def _read_cdf_batches(part: _CdfPartition, schema: StructType):
     """Arrow-native change-feed read for one split. ``insert`` emits
     the file minus its (restore-carried) DV; ``delete`` emits the file
@@ -214,14 +195,15 @@ def _read_cdf_batches(part: _CdfPartition, schema: StructType):
     if part.kind in ("dv", "undv"):
         # dv: rows newly masked (deleted); undv: rows un-masked by a
         # restore (inserted back) — both are pure sidecar set algebra.
-        a, b = _dv_positions(part.dv_new, base), _dv_positions(part.dv_old, base)
+        a = tf._dv_positions(part.dv_new, base)
+        b = tf._dv_positions(part.dv_old, base)
         fresh = np.setdiff1d(a, b) if part.kind == "dv" else np.setdiff1d(b, a)
         mask = np.zeros(n, dtype=bool)
         mask[fresh] = True
     else:
         sidecar = part.dv_new if part.kind == "insert" else part.dv_old
         mask = np.ones(n, dtype=bool)
-        mask[_dv_positions(sidecar, base)] = False
+        mask[tf._dv_positions(sidecar, base)] = False
     tbl = tbl.filter(pa.array(mask))
     n = tbl.num_rows
     change = "deleted" if part.kind in ("delete", "dv") else "inserted"
