@@ -1,18 +1,19 @@
 """Eager localCheckpoint with metrics folded into the checkpoint job.
 
-Guide §1.2 / VERDICT r14 #5: the iterative operators (BFS, fused
-Bellman-Ford, IVM refresh) paid TWO Spark jobs per round — the eager
-pin, then a separate isEmpty()/agg probe over the frame they had just
-materialized. A named CollectMetrics node rides the checkpoint's own
-materialization, so the probe is free.
+The iterative operators (BFS, fused Bellman-Ford, IVM refresh) pin a
+frame and then need a small probe over it (is it empty, what is its
+key range). Run as a separate isEmpty()/agg action, the probe is a
+second Spark job per round over a frame just materialized; at small
+sizes each job's fixed cost is the latency. A named CollectMetrics node
+rides the checkpoint's own materialization, so the probe is free.
 
 Deliberately NOT ``pyspark.sql.Observation``: its implementation
 registers with the session-level ObservationManager, and after any
 query used it, every subsequent STREAMING query in the same session
 died at task-closure serialization (``NotSerializableException:
-org.apache.spark.sql.classic.ObservationManager`` — found when bench
-r15 run 1 killed score_stream, reproduced with graph_weighted_paths +
-a rate stream). The string-named ``observe`` variant plants the same
+org.apache.spark.sql.classic.ObservationManager``; reproduced with
+graph_weighted_paths followed by a rate-source stream, and pinned by a
+test). The string-named ``observe`` variant plants the same
 CollectMetrics node but keeps no session state; the values come back
 through the observed plan's OWN QueryExecution after the eager
 checkpoint has run it.
@@ -22,6 +23,7 @@ from __future__ import annotations
 
 from typing import Any
 
+from pyspark.serializers import CPickleSerializer
 from pyspark.sql import Column, DataFrame
 
 
@@ -30,16 +32,18 @@ def checkpoint_with_metrics(
 ) -> tuple[DataFrame, dict[str, Any]]:
     """``df.localCheckpoint(eager=True)`` + the given aggregate
     metrics computed in the SAME job. Returns (checkpointed_df,
-    {metric_alias: value}). The metric names are plan-local, so reuse
-    across rounds/queries is safe (each round's input is the previous
-    round's checkpointed LogicalRDD — no CollectMetrics survives into
-    it)."""
+    {metric_alias: value}), each value the Python object ``collect()``
+    would return for it (dates and timestamps as ``datetime`` values,
+    not py4j handles on JVM objects). The metric names are plan-local,
+    so reuse across rounds/queries is safe (each round's input is the
+    previous round's checkpointed LogicalRDD — no CollectMetrics
+    survives into it)."""
     observed = df.observe(name, *aggs)
     ck = observed.localCheckpoint(eager=True)
-    om = observed._jdf.queryExecution().observedMetrics()
-    row = om.apply(name)
-    schema = row.schema()
-    out: dict[str, Any] = {}
-    for i in range(schema.size()):
-        out[schema.apply(i).name()] = row.get(i)
-    return ck, out
+    jrow = observed._jdf.queryExecution().observedMetrics().apply(name)
+    # the same JVM-to-Python row conversion Observation.get uses
+    utils = getattr(
+        df.sparkSession._jvm, "org.apache.spark.sql.api.python.PythonSQLUtils"
+    )
+    row = CPickleSerializer().loads(utils.toPyRow(jrow))
+    return ck, row.asDict(recursive=False)

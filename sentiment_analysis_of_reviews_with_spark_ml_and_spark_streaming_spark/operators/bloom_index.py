@@ -283,7 +283,7 @@ def bloom_lookup(
     _live, schema = tfmt.snapshot_files(root, version)
     st = StructType.fromJson(schema)
     if not read:
-        return spark.createDataFrame([], st)
+        return tfmt._empty_frame(spark, st)
     # DV-aware read: a merge-on-read delete must not resurrect in lookups
     return tfmt.read_files(spark, root, read, st).filter(
         F.col(col).isin([v for v in values if v is not None])

@@ -15,8 +15,9 @@ Same architecture the real formats use, re-expressed in ~300 lines:
   the replay of adds minus removes up to ``v``. Any historical version
   stays readable until :func:`vacuum` reclaims its unreferenced files.
 * **File-level stats pruning**: each add records per-file min/max for
-  the declared stat columns (one tiny agg over the just-written files,
-  grouped by ``input_file_name``). :func:`merge_upsert` and
+  the declared stat columns, read from the just-written parquet footers
+  (a Spark agg over the new files only where footer stats cannot be
+  exact). :func:`merge_upsert` and
   :func:`delete_where` prune to candidate files via those stats, so a
   10-row upsert into a 100 TB table rewrites only the files whose
   [min,max] key range can contain the keys — everything else is
@@ -51,6 +52,7 @@ out of scope here, as it is for OSS Delta.
 
 from __future__ import annotations
 
+import datetime
 import json
 import os
 import shutil
@@ -271,21 +273,43 @@ def _batch_ids_through(root: str, version: int) -> set[int]:
 # data-file helpers
 
 
+def _binary_string_cols(md) -> set[str]:
+    """Top-level string columns of a Spark-written parquet file whose
+    collation is ``UTF8_BINARY``, from the Spark schema Spark keeps in
+    the footer; empty when the file carries no Spark schema."""
+    from pyspark.sql.types import StringType
+
+    raw = (md.metadata or {}).get(b"org.apache.spark.sql.parquet.row.metadata")
+    if raw is None:
+        return set()
+    return {
+        f.name
+        for f in StructType.fromJson(json.loads(raw)).fields
+        if isinstance(f.dataType, StringType)
+        and f.dataType.collation == "UTF8_BINARY"
+    }
+
+
 def _footer_adds(
     out_dir: str, rel: str, stat_cols: list[str]
 ) -> list[dict] | None:
     """Per-file (rows, min/max) add-entries read straight from the
-    parquet FOOTERS just written — zero Spark jobs (~2 ms vs ~250 ms +
-    a job for the read-back agg; commit latency is the lakehouse DML
-    queries' dominant cost). Sound only where footer stats are exact
-    and match Spark's agg semantics bit-for-bit, so the gate admits
-    integer / boolean / date stat columns ONLY and returns ``None``
-    (caller falls back to the Spark agg) for anything else:
+    parquet FOOTERS just written — zero Spark jobs, where the read-back
+    agg costs two on every write.
+    Sound only where footer stats are exact and match Spark's agg
+    semantics bit-for-bit, so the gate admits integer, boolean, date
+    and ``UTF8_BINARY`` string stat columns and returns ``None`` (the
+    caller falls back to the Spark agg) for anything else:
 
+    - strings are exact because :func:`_write_data_files` writes with
+      ``parquet.statistics.truncate.length`` at its maximum, overriding
+      any session setting that would truncate min/max; values whose
+      min+max pass parquet's 4 KB stats limit get no min/max at all and
+      fall back below. Parquet orders strings as unsigned bytes, which
+      is Spark's ``UTF8_BINARY`` order (and Python's ``str`` order);
+      any other collation orders differently and falls back;
     - floats: parquet stats EXCLUDE NaN while Spark's min/max order it
       largest — footer bounds would unsoundly prune NaN-holding files;
-    - strings: parquet may truncate long min/max and this pyarrow has
-      no ``is_*_value_exact`` flags to detect it;
     - timestamps: footer values are UTC-normalized, Spark's agg renders
       in the session zone — the rendered bounds could disagree.
 
@@ -324,7 +348,10 @@ def _footer_adds(
             if idx is None or fi < 0:
                 return None
             t = schema.field(fi).type
-            if not (
+            if pa.types.is_string(t):
+                if c not in _binary_string_cols(md):
+                    return None
+            elif not (
                 pa.types.is_integer(t)
                 or pa.types.is_boolean(t)
                 or pa.types.is_date(t)
@@ -372,7 +399,10 @@ def _write_data_files(
     """
     rel = f"data/v{version:08d}-{uuid.uuid4().hex[:8]}"
     out_dir = os.path.join(root, rel)
-    df.write.mode("error").parquet(out_dir)
+    # untruncated string min/max make the footer stats exact
+    df.write.mode("error").option(
+        "parquet.statistics.truncate.length", str(2**31 - 1)
+    ).parquet(out_dir)
     fast = _footer_adds(out_dir, rel, stat_cols)
     if fast is not None:
         return sorted(fast, key=lambda a: a["path"])
@@ -414,9 +444,19 @@ def _json_stat(v):
     stay correct as long as bounds are rendered the same way."""
     if v is None or isinstance(v, (int, float, str, bool)):
         return v
-    if hasattr(v, "isoformat"):
+    if isinstance(v, datetime.date):  # datetime.datetime included
         return v.isoformat()
     return str(v)
+
+
+def _empty_frame(spark: SparkSession, st: StructType) -> DataFrame:
+    """A zero-row frame of schema ``st``, planned as an empty
+    ``LocalRelation``. ``spark.createDataFrame([], st)`` plans a
+    LogicalRDD over a Python RDD instead, whose tasks start Python
+    workers each time it is read."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    return spark.createDataFrame(to_arrow_schema(st).empty_table(), schema=st)
 
 
 def _abs_paths(root: str, adds: list[dict]) -> list[str]:
@@ -590,9 +630,7 @@ def read_files(
             df = df.drop("_file", "_pos")
         parts.append(df)
     if not parts:
-        return spark.createDataFrame(
-            [], _meta_schema(st) if with_meta else st
-        )
+        return _empty_frame(spark, _meta_schema(st) if with_meta else st)
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
@@ -917,12 +955,7 @@ def merge_upsert(
     if len(key_rows) <= 10_000:
         key_vals = [_json_stat(r[key_col]) for r in key_rows]
     else:
-        lo, hi = b["lo"], b["hi"]
-        if not all(isinstance(x, (int, float, str, bool)) for x in (lo, hi)):
-            # observed dates/timestamps arrive as JVM objects, whose
-            # rendering differs from the stats' isoformat
-            lo, hi = updates.agg(F.min(key_col), F.max(key_col)).first()
-        bounds[key_col] = (_json_stat(lo), _json_stat(hi))
+        bounds[key_col] = (_json_stat(b["lo"]), _json_stat(b["hi"]))
     for _ in range(max_retries):
         base_v = latest_version(root)
         live, _schema = snapshot_files(root, base_v)
@@ -1582,7 +1615,9 @@ def table_changes(
     A later REMOVE of a DV'd file (compact, merge, cow delete) reads it
     through its pre-commit DV, so rows already reported deleted are
     never reported twice — the feed stays an exact multiset delta of
-    the logical table at every version."""
+    the logical table at every version. Layout-only commits (compact,
+    cluster) hold the same logical rows before and after, so they add
+    nothing to the feed and none of their files is read."""
     head = latest_version(root)
     if not 0 <= v_from < v_to <= head:
         raise ValueError(
@@ -1600,12 +1635,32 @@ def table_changes(
 
     def _side(entries: list[dict]) -> DataFrame:
         if not entries:
-            return spark.createDataFrame([], st)
+            return _empty_frame(spark, st)
         return read_files(spark, root, entries, st)
+
+    def _roll_forward(rec: dict, dv_items: dict) -> None:
+        for p in rec.get("remove", []):
+            pre.pop(p, None)
+        for a in rec.get("add", []):
+            pre[a["path"]] = a
+        for p, d2 in dv_items.items():
+            if p in pre:
+                pre[p] = {
+                    **pre[p],
+                    "dv": {"sidecar": d2["sidecar"], "rows": d2["rows"]},
+                }
 
     out = None
     for v in range(v_from + 1, v_to + 1):
         rec = _read_commit(root, v)
+        dv_items = {p: d2 for p, d2 in rec.get("dv", {}).items() if p in pre}
+        action = rec.get("action")
+        if action in ("compact", "cluster") and not rec.get("dv"):
+            # layout-only commits rewrite the SAME logical rows (DV
+            # masks applied on both sides), so their feed is empty:
+            # neither side is planned
+            _roll_forward(rec, dv_items)
+            continue
         added_entries = rec.get("add", [])
         removed_entries = [
             pre[p] for p in rec.get("remove", []) if p in pre
@@ -1613,24 +1668,15 @@ def table_changes(
         added = _side(added_entries)
         removed = _side(removed_entries)
         # exceptAll is a full-width multiset shuffle — only mixed
-        # add+remove commits (merge, compact, cow delete rewrites) need
-        # the cancellation; append-only and remove-only commits get the
+        # add+remove commits (merge, cow delete rewrites) need the
+        # cancellation; append-only and remove-only commits get the
         # identity short-circuit (exceptAll with an empty side IS the
         # other side), so an append fold into an IVM refresh pays no
         # shuffle
-        action = rec.get("action")
         if not removed_entries:
             d = added.withColumn("_change_type", F.lit("inserted"))
         elif not added_entries:
             d = removed.withColumn("_change_type", F.lit("deleted"))
-        elif action in ("compact", "cluster"):
-            # layout-only commits rewrite the SAME logical rows (DV
-            # masks applied on both sides), so the two exceptAll
-            # shuffles always cancelled to an empty feed — emit it
-            # directly
-            d = spark.createDataFrame([], st).withColumn(
-                "_change_type", F.lit("inserted")
-            )
         elif action == "delete":
             # copy-on-write delete: added files are survivor subsets
             # of the removed files, so the inserted side is empty by
@@ -1647,7 +1693,6 @@ def table_changes(
                     .withColumn("_change_type", F.lit("deleted"))
                 )
             )
-        dv_items = {p: d2 for p, d2 in rec.get("dv", {}).items() if p in pre}
         # rows newly masked by this commit: new sidecar − old sidecar,
         # diffed on the driver and handed to Spark as a local relation
         fresh = {}
@@ -1676,17 +1721,12 @@ def table_changes(
             d = d.unionByName(masked)
         d = d.withColumn("_commit_version", F.lit(v).cast("long"))
         out = d if out is None else out.unionByName(d)
-        # roll the pre-state forward past this commit
-        for p in rec.get("remove", []):
-            pre.pop(p, None)
-        for a in added_entries:
-            pre[a["path"]] = a
-        for p, d2 in dv_items.items():
-            if p in pre:
-                pre[p] = {
-                    **pre[p],
-                    "dv": {"sidecar": d2["sidecar"], "rows": d2["rows"]},
-                }
+        _roll_forward(rec, dv_items)
+    if out is None:  # every commit in the range was layout-only
+        out = _empty_frame(spark, st).withColumns({
+            "_change_type": F.lit("inserted"),
+            "_commit_version": F.lit(v_to).cast("long"),
+        })
     return out
 
 

@@ -9,7 +9,9 @@ driver-side sidecar read/diff/write path against independent oracles.
 * Above 10,000 distinct keys MERGE's bounded key collect falls back to
   a full duplicate query and to the key-range hull for pruning.
 * Spark jobs per MoR operation are bounded, since at these sizes the
-  per-job cost is the latency.
+  per-job cost is the latency: a MoR merge, a string-keyed lakehouse
+  step (merge, rollup refresh, compaction) and the change feed over
+  layout-only commits.
 """
 
 from __future__ import annotations
@@ -194,3 +196,86 @@ def test_mor_merge_and_change_feed_job_counts(spark, tmp_path):
     # before the sidecars moved to the driver: 17 and 7 jobs
     assert 0 < merge_jobs <= 7, merge_jobs
     assert 0 < feed_jobs <= 2, feed_jobs
+
+
+def _string_keyed(spark, seg, ks):
+    return spark.createDataFrame(
+        [(f"r{k:05d}", f"b{k % 13:02d}", seg, (k + len(seg)) % 5)
+         for k in ks],
+        "rid string, biz string, seg string, stars long",
+    )
+
+
+def test_string_keyed_step_job_counts(spark, tmp_path):
+    """A lakehouse step over string-keyed tables (a MoR merge, the
+    rollup refresh and a compaction) takes its stats from the parquet
+    footers, not from a Spark aggregate over the new files; a refresh
+    that folds a compaction commit reads none of its files."""
+    from sentiment_analysis_of_reviews_with_spark_ml_and_spark_streaming_spark.operators import (
+        ivm,
+    )
+
+    src, view = str(tmp_path / "src"), str(tmp_path / "view")
+    tf.create_table(
+        _string_keyed(spark, "A", range(1000)).repartitionByRange(4, "rid"),
+        src, stat_cols=["rid"],
+    )
+    ivm.create_rollup(spark, src, view, keys=["biz"], sum_cols=["stars"])
+    tf.merge_upsert(_string_keyed(spark, "PP", range(0, 1000, 7)), src,
+                    key_col="rid", mode="mor")
+    ivm.refresh_rollup(spark, view)
+
+    def merge(seg, ks):
+        return lambda: tf.merge_upsert(_string_keyed(spark, seg, ks), src,
+                                       key_col="rid", mode="mor")
+
+    def refresh():
+        ivm.refresh_rollup(spark, view)
+
+    merge_jobs = _jobs(spark, "str-merge", merge("Q", range(5, 1000, 13)))
+    refresh_jobs = _jobs(spark, "str-refresh", refresh)
+    compact_jobs = _jobs(
+        spark, "str-compact", lambda: tf.compact_small(spark, src)
+    )
+    assert tf._read_commit(src, tf.latest_version(src))["action"] == "compact"
+    merge("R", range(3, 1000, 11))()
+    folded_jobs = _jobs(spark, "str-refresh-compact", refresh)
+    # with the stats aggregate every string-keyed write paid: 9, 8, 4
+    assert 0 < merge_jobs <= 7, merge_jobs
+    assert 0 < refresh_jobs <= 6, refresh_jobs
+    assert 0 < compact_jobs <= 2, compact_jobs
+    assert 0 < folded_jobs <= refresh_jobs, (folded_jobs, refresh_jobs)
+    want = tf.read_table(spark, src).groupBy("biz").agg(
+        F.count(F.lit(1)).alias("n_rows"), F.sum("stars").alias("sum_stars")
+    )
+    assert sorted(map(tuple, ivm.read_rollup(spark, view).collect())) == (
+        sorted(map(tuple, want.collect()))
+    )
+
+
+def test_change_feed_over_layout_only_commits_is_empty(spark, tmp_path):
+    """A range of compaction and clustering commits has an empty change
+    feed with the feed's schema, planned without reading any file."""
+    root = str(tmp_path / "t")
+    tf.create_table(
+        _string_keyed(spark, "A", range(500)).repartition(4), root,
+        stat_cols=["rid"],
+    )
+    tf.delete_where(spark, root, "rid < 'r00100'", prune_col="rid",
+                    mode="mor")
+    v0 = tf.latest_version(root)
+    tf.compact(spark, root)
+    tf.optimize_cluster(spark, root, ["rid"], target_files=2)
+    feed = None
+
+    def changes():
+        nonlocal feed
+        feed = tf.table_changes(spark, root, v0, v0 + 2)
+        return feed.collect()
+
+    assert _jobs(spark, "layout-feed", changes) == 0
+    assert feed.collect() == []
+    assert feed.schema.simpleString() == (
+        "struct<rid:string,biz:string,seg:string,stars:bigint,"
+        "_change_type:string,_commit_version:bigint>"
+    )

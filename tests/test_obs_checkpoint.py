@@ -10,6 +10,7 @@ score_stream to `NotSerializableException: ObservationManager`).
 
 from __future__ import annotations
 
+import datetime
 import tempfile
 import time
 
@@ -87,3 +88,21 @@ def test_streaming_survives_observed_checkpoints(spark):
         assert q.recentProgress, "stream made no progress in 30s"
     finally:
         q.stop()
+
+
+def test_metrics_are_the_values_collect_returns(spark):
+    """Observed dates, timestamps and decimals come back as the Python
+    objects ``collect()`` gives, not as handles on JVM objects."""
+    df = spark.range(5).select(
+        F.date_add(F.lit("2020-01-01").cast("date"), F.col("id").cast("int"))
+        .alias("d"),
+        (F.lit("2020-01-01 00:00:00").cast("timestamp")
+         + F.make_interval(secs=F.col("id") * 1.5)).alias("ts"),
+        (F.col("id") / 4).cast("decimal(10,2)").alias("dec"),
+    )
+    aggs = (F.min("d").alias("d_lo"), F.max("ts").alias("ts_hi"),
+            F.sum("dec").alias("dec_sum"))
+    _ck, m = checkpoint_with_metrics(df, "probe", *aggs)
+    assert m == df.agg(*aggs).first().asDict()
+    assert type(m["d_lo"]) is datetime.date
+    assert type(m["ts_hi"]) is datetime.datetime

@@ -1574,7 +1574,9 @@ def test_footer_stats_equal_spark_agg(spark, tmp_path):
 
     fast, slow = both(["k", "flag", "d", "only_null"])
     assert fast == slow
-    for bad in (["f"], ["s"], ["k", "f"]):
+    fast, slow = both(["s"])
+    assert fast == slow
+    for bad in (["f"], ["k", "f"]):
         fast, _slow = both(bad)
         assert fast is None, f"gate must reject {bad}"
 
@@ -1596,6 +1598,96 @@ def test_footer_stats_equal_spark_agg(spark, tmp_path):
     after, _ = tf.snapshot_files(root, 1)
     kept = {a["path"] for a in after}
     assert all(a["path"] in kept for a in hi_files)  # carried by reference
+
+
+def _agg_adds(spark, out, rel, stat_cols):
+    """The add-entries the Spark read-back agg records for ``out``."""
+    written = spark.read.parquet(out)
+    aggs = [F.count(F.lit(1)).alias("_rows")]
+    for c in stat_cols:
+        aggs += [F.min(c).alias(f"_min_{c}"), F.max(c).alias(f"_max_{c}")]
+    return sorted(
+        (
+            {
+                "path": os.path.join(
+                    rel, os.path.basename(r["_file"].removeprefix("file:"))
+                ),
+                "rows": r["_rows"],
+                "stats": {
+                    c: [tf._json_stat(r[f"_min_{c}"]),
+                        tf._json_stat(r[f"_max_{c}"])]
+                    for c in stat_cols
+                },
+            }
+            for r in written.groupBy(F.input_file_name().alias("_file"))
+            .agg(*aggs).collect()
+        ),
+        key=lambda a: a["path"],
+    )
+
+
+def test_footer_string_stats_exact_or_fallback(spark, tmp_path):
+    """String stat columns take the footer path and equal the Spark agg
+    (unicode, empty strings, all-NULL files, a session-level truncate
+    length); values past parquet's 4 KB stats limit, a non-binary
+    collation, floats and timestamps fall back to the agg, so
+    ``_write_data_files`` still records the agg's bounds for them."""
+    import datetime
+
+    uni = ["", "a", "Z", "é", "ß", "☃", "\U0001F600", "zz", "y" * 40 + "b"]
+    rows = [
+        (i, uni[i % len(uni)], "y" * 30 + chr(97 + i % 5),
+         "B" if i % 2 else "a", "q" * 5000 if i == 3 else "short",
+         None if i % 7 else "m", i * 0.5,
+         datetime.datetime(2020, 1, 1, i % 24))
+        for i in range(40)
+    ]
+    df = spark.createDataFrame(
+        rows,
+        "k long, u string, long_s string, ci string, big string, "
+        "sparse string, f double, ts timestamp",
+    ).withColumn("ci", F.expr("collate(ci, 'UTF8_LCASE')"))
+    # one file holds only NULLs in `sparse`
+    df = df.repartition(3, "k").union(
+        df.filter("k = 0").withColumn("sparse", F.lit(None).cast("string"))
+        .coalesce(1)
+    )
+
+    def footer_and_agg(cols):
+        out = str(tmp_path / f"d_{'_'.join(cols)}")
+        df.write.parquet(out)
+        fast = tf._footer_adds(out, "rel", cols)
+        return (sorted(fast, key=lambda a: a["path"])
+                if fast is not None else None), _agg_adds(spark, out, "rel",
+                                                          cols)
+
+    fast, slow = footer_and_agg(["k", "u", "long_s", "sparse"])
+    assert fast == slow
+    assert [None, None] in [a["stats"]["sparse"] for a in fast]
+    assert min(a["stats"]["u"][0] for a in fast) == ""
+    assert max(a["stats"]["u"][1] for a in fast) == "\U0001F600"
+    for bad in (["big"], ["ci"], ["f"], ["ts"], ["u", "ts"]):
+        fast, _slow = footer_and_agg(bad)
+        assert fast is None, f"gate must reject {bad}"
+
+    # Through the table's writer: its write option keeps string min/max
+    # exact under a session setting that truncates them, and the
+    # fallback columns still get the agg's bounds.
+    spark.conf.set("parquet.statistics.truncate.length", "8")
+    try:
+        plain = str(tmp_path / "plain")
+        df.write.parquet(plain)
+        truncated = tf._footer_adds(plain, "rel", ["long_s"])
+        assert truncated != _agg_adds(spark, plain, "rel", ["long_s"])
+        for cols in (["long_s", "u"], ["big"], ["ci"], ["f", "ts"]):
+            root = str(tmp_path / f"t_{'_'.join(cols)}")
+            adds = tf._write_data_files(df, root, 0, cols)
+            rel = os.path.dirname(adds[0]["path"])
+            assert adds == _agg_adds(
+                spark, os.path.join(root, rel), rel, cols
+            ), cols
+    finally:
+        spark.conf.unset("parquet.statistics.truncate.length")
 
 
 def test_footer_stats_nested_schema_resolves_leaf(spark, tmp_path):
