@@ -11,7 +11,7 @@ Four tiers, each with a distinct scale/recall trade-off:
   an inverted-index self-join (blocking on shared shingle). Exact but
   O(pairs-sharing-a-shingle); usable as the verify stage after LSH.
 - minhash-lsh: MinHash banded candidate generation — the 100 TB path
-  (candidates only, linear-ish shuffle). Since r15 the ml.feature
+  (candidates only, linear-ish shuffle). The ml.feature
   semantics (HashingTF murmur3 indices, MinHashLSH's JDK-LCG
   signatures, approxSimilarityJoin banding/keyDistance) run as native
   expressions, value-identical to the model chain.
@@ -68,9 +68,9 @@ def shingle(
     # all empty docs paired with each other at jaccard 1.0 (an
     # O(n_empty²) blowup in the inverted-index and minhash band joins).
     ngrams = (
-        # NULL text maps to zero shingles like empty text (r13): the
-        # old fall-through hit the short-doc branch (size(NULL) = -1)
-        # and produced the single shingle [NULL] — a doc the DuckDB
+        # NULL text maps to zero shingles like empty text: falling
+        # through to the short-doc branch (size(NULL) = -1) would
+        # produce the single shingle [NULL] — a doc the DuckDB
         # twins all DROP (len(split(NULL)) IS NULL fails their len>0
         # filter) and whose NULL hash could NPE ml.feature consumers
         # (HashingTF rejects null array elements)
@@ -117,11 +117,11 @@ def ngram_jaccard_pairs(
     LSH candidates (``minhash_lsh_candidates``) instead of the full
     inverted index, and keep the DF cap on as the boilerplate guard.
     """
-    # r14: materialize the shingle pass once — `bare` is referenced by
-    # both the hot-shingle aggregate and the kept anti-join (and the
+    # Materialize the shingle pass once: `bare` is referenced by both
+    # the hot-shingle aggregate and the kept anti-join (and the
     # uncapped branch's `inv` feeds both sides of the self-join), so
-    # the scan + regex shingling otherwise recomputes 2-4x (guide
-    # §1.2). Same rationale as prefix_filter_pairs.
+    # the scan + regex shingling would otherwise recompute 2-4x. Same
+    # rationale as prefix_filter_pairs.
     sh = shingle(df, id_col=id_col, text_col=text_col, n=n).localCheckpoint(
         eager=True
     )
@@ -188,14 +188,14 @@ def minhash_lsh_candidates(
     recall vs candidate volume; shuffle is O(docs × tables), never
     O(docs²).
 
-    r15 (guide §4.1 / §1.2): everything downstream of HashingTF now
-    runs as native expressions — the ml.feature chain evaluated its
-    MinHash functions as a row-at-a-time JVM UDF over sparse vectors,
-    TWICE (once per self-join side; the transform was never cached),
-    and ``approxSimilarityJoin`` deduplicated candidate pairs by a
-    ``distinct()`` over FULL (features, hashes) struct pairs — the
-    heaviest shuffle in the plan carried every sparse vector once per
-    candidate row. Value-identical replacement:
+    Everything downstream of HashingTF runs as native expressions.
+    The ml.feature chain would evaluate its MinHash functions as a
+    row-at-a-time JVM UDF over sparse vectors, TWICE (once per
+    self-join side; the transform is not cached), and
+    ``approxSimilarityJoin`` deduplicates candidate pairs by a
+    ``distinct()`` over FULL (features, hashes) struct pairs, so the
+    heaviest shuffle in its plan carries every sparse vector once per
+    candidate row. The value-identical native form:
 
     - HashingTF itself is KEPT (one JVM pass over the shingle arrays):
       its murmur3_x86_32 is the hashUnsafeBytes2 variant, which Spark
@@ -244,8 +244,8 @@ def minhash_lsh_candidates(
 
     # one projection produces the index SET (keyDistance input) and
     # all num_hash_tables signatures. Pinned: the band self-join
-    # consumes it twice and the distance join twice more (no
-    # ReusedExchange in Spark 4.1 self-join plans — the r14 finding).
+    # consumes it twice and the distance join twice more, and Spark
+    # 4.1 plans no ReusedExchange for these self-joins.
     doc = (
         feat.select(
             F.col(id_col),
@@ -336,18 +336,15 @@ def minhash_native_candidates(
             F.min(F.xxhash64(F.col("_h0"), F.lit(k))).alias(f"_h{k}")
             for k in range(num_hashes)
         ]
-        # r15 (VERDICT r14 #1): the r14 signature localCheckpoint was
-        # REVERTED on measurement — the pin was plan-justified (the
-        # band self-join re-ran the scan → shingle → explode → K-hash
-        # → groupBy chain per side; no ReusedExchange in Spark 4.1),
-        # but an interleaved same-session A/B at sf0.1 (min-of-4:
-        # pinned 2.658 s vs unpinned 2.574 s, unpinned won 3/4 pairs)
-        # agreed with BOTH r14 stamp pairs (driver 2.77→7.68 s,
-        # same-host 3.37→5.21 s): the eager materialization barrier
-        # costs more than the duplicated all-codegen recompute. At
-        # cluster scale the trade may reverse (two full corpus scans
-        # vs one executor-local write) — revisit with cluster numbers,
-        # not local ones.
+        # Not pinned, though the band self-join re-runs the scan →
+        # shingle → explode → K-hash → groupBy chain per side (no
+        # ReusedExchange in Spark 4.1): locally the eager
+        # materialization barrier costs more than the duplicated
+        # all-codegen recompute (interleaved A/B at sf0.1, min of 4:
+        # pinned 2.658 s vs unpinned 2.574 s, unpinned won 3/4 pairs).
+        # At cluster scale the trade may reverse (two full corpus
+        # scans vs one executor-local write); revisit with cluster
+        # numbers, not local ones.
     )
     bands = sig.select(
         F.col(id_col),
@@ -558,7 +555,7 @@ def minhash_ml_replay_candidates(
     tests/test_minhash_spec_values.py) and the published
     ``min((1 + i) * a + b) mod P`` map become literals in generated
     SQL — promoting the ml.feature hash chain itself to a
-    value-hash-checked surface (VERDICT r12 #2).
+    value-hash-checked surface.
 
     Banding is r = 2 (``rows_per_band`` signatures per band, the
     :func:`minhash_portable_candidates` shape): single-signature
@@ -571,8 +568,8 @@ def minhash_ml_replay_candidates(
     agreeing signature positions — an integer-only surface (no float
     kinds for the driver's hasher).
 
-    r15 (guide §4.1): the sparse-vector assembly UDF +
-    ``MinHashLSH.fit/transform`` are gone — the signatures come from
+    No sparse-vector assembly UDF and no ``MinHashLSH.fit/transform``
+    run here: the signatures come from
     the SAME published formula the model applies,
     ``min over indices i of ((1 + i) · aₜ + bₜ) mod HASH_PRIME`` with
     the seeded JDK-LCG (aₜ, bₜ) draws from functions/jdk_random.py
@@ -746,14 +743,13 @@ def maximal_duplicate_spans(
             F.regexp_extract_all(norm, F.lit(window_pat), 1)
         ).alias("pos", "_span"),
     ).select(id_col, "pos", F.md5("_span").alias("_h"))
-    # r14: duplication gate via count-over-window instead of
-    # groupBy + semi-join back — the old shape computed the window
-    # explode + md5 pass TWICE (both sides of the semi-join; no
-    # exchange reuse in the r13 plan) and shuffled twice on _h. The
-    # window partitions by the same key the aggregation grouped on,
-    # so this is one pass and one exchange (guide §2.4), with
-    # identical semantics (keep windows whose hash occurs >=
-    # min_occurrences corpus-wide).
+    # Duplication gate via count-over-window, not groupBy + semi-join
+    # back: the semi-join shape computes the window explode + md5 pass
+    # TWICE (both sides; no exchange reuse) and shuffles twice on _h.
+    # The window partitions by the same key the aggregation would
+    # group on, so this is one pass and one exchange, with identical
+    # semantics (keep windows whose hash occurs >= min_occurrences
+    # corpus-wide).
     seeds = (
         wins.withColumn(
             "_c", F.count("*").over(Window.partitionBy("_h"))
@@ -903,23 +899,20 @@ def near_dup_verified(
             min_est_jaccard=0.0,
         )
         .select("id_a", "id_b")
-        # r14: spread the exact verify — same AQE-coalescing trap as
+        # Spread the exact verify: the same AQE-coalescing trap as
         # prefix_filter_pairs (16-byte candidate rows coalesce to 1-2
-        # tasks; the array_intersect over full shingle arrays lands on
-        # them). Round-robin over defaultParallelism, scale-adaptive.
-        # r15 (VERDICT r14 #1): KEPT on re-measurement — interleaved
-        # same-session A/B at sf0.1 (min-of-4: spread 2.860 s vs
-        # unspread 2.938 s, spread won 3/4 pairs); the r14 closing
-        # stamp's 3.36→5.89 s was host weather, as the builder's own
-        # back-to-back A/B (3.84→3.79 s) already indicated.
+        # tasks, and the array_intersect over full shingle arrays
+        # lands on them). Round-robin over defaultParallelism is
+        # scale-adaptive. Measured worth it: interleaved A/B at sf0.1,
+        # min of 4: spread 2.860 s vs unspread 2.938 s, spread won 3/4
+        # pairs.
         .repartition(df.sparkSession.sparkContext.defaultParallelism)
     )
-    # r14: deliberately NOT pinning this shingle frame — an A/B at
-    # sf0.1 (4 variants x 2 rounds, /tmp toggle harness) showed the
-    # checkpoint of the full shingle arrays costs MORE than the two
-    # narrow recomputed scans it saves (4.7s vs 3.8s with the
-    # candidate repartition), unlike prefix_filter_pairs where six
-    # consumers amortize the pin.
+    # Deliberately NOT pinning this shingle frame: at sf0.1 (4
+    # variants x 2 repeats) the checkpoint of the full shingle arrays
+    # cost MORE than the two narrow recomputed scans it saves (4.7 s
+    # vs 3.8 s with the candidate repartition), unlike
+    # prefix_filter_pairs, where six consumers amortize the pin.
     sh = shingle(df, id_col=id_col, text_col=text_col, n=n)
     a = sh.select(F.col(id_col).alias("id_a"), F.col("shingles").alias("_sa"))
     b = sh.select(F.col(id_col).alias("id_b"), F.col("shingles").alias("_sb"))
@@ -1054,8 +1047,8 @@ def simhash_near_dup_pairs(
             f"max_hamming={max_hamming} breaks the pigeonhole full-recall "
             f"guarantee for bands={bands}: require max_hamming <= bands-1"
         )
-    # r14: materialize the fingerprints ONCE — the band self-join
-    # otherwise re-runs the whole simhash pipeline (token explode +
+    # Materialize the fingerprints ONCE: the band self-join would
+    # otherwise re-run the whole simhash pipeline (token explode +
     # dict join + 64-vote groupBy) per side; (id, long) rows, the
     # cheapest possible pin.
     fps = simhash(df, id_col=id_col, text_col=text_col).localCheckpoint(
@@ -1131,12 +1124,12 @@ def connected_components(
             F.col(dst).cast("long").alias("u"), F.col(src).cast("long").alias("v")
         )
     )
-    # r14: materialize sym HASH-PARTITIONED ON v — the neighbor-min
-    # join probes sym.v against labels.node every round, and a
-    # LogicalRDD checkpoint preserves its partitioning (the
+    # Materialize sym HASH-PARTITIONED ON v: the neighbor-min join
+    # probes sym.v against labels.node every round, and a LogicalRDD
+    # checkpoint preserves its partitioning (the
     # graph.py:src_partitioned trick), so only the (long, long) labels
-    # side shuffles per round instead of the whole edge list (guide
-    # §2.4 "two operations keyed the same way share one exchange").
+    # side shuffles per round instead of the whole edge list (two
+    # operations keyed the same way share one exchange).
     sym = sym.distinct().repartition("v").localCheckpoint(eager=True)
 
     labels = (
@@ -1161,9 +1154,9 @@ def connected_components(
                 "node",
                 F.least("comp", F.coalesce("ncomp", "comp")).alias("comp"),
             )
-            # r14: pin it — propagated feeds BOTH sides of the
+            # pinned: propagated feeds BOTH sides of the
             # pointer-doubling self-join below; unpinned, the
-            # neighbor-min join + groupBy re-ran twice per round.
+            # neighbor-min join + groupBy would re-run twice per round.
             .localCheckpoint(eager=True)
         )
         # pointer-doubling pass: label(node) <- label(label(node)).
@@ -1389,9 +1382,10 @@ def semdedup(
     # bit-identical to the DuckDB oracle's per-pair formula.
     from .similarity import _dot, _norm
 
-    # r14: materialize (id, vec, norm) once — it feeds the assignment
-    # cross join AND the cluster attach below (the r13 plan held 18
-    # parquet scans of the embedding table; no exchange reuse fires).
+    # Materialize (id, vec, norm) once: it feeds the assignment cross
+    # join AND the cluster attach below, and no exchange reuse fires
+    # (unpinned, the plan held 18 parquet scans of the embedding
+    # table).
     withn = emb.select(
         F.col(id_col), F.col(vec_col), _norm(F.col(vec_col)).alias("_nrm")
     ).localCheckpoint(eager=True)
@@ -1420,8 +1414,8 @@ def semdedup(
         .filter(F.col("_rn") == 1)
         .select(F.col(id_col), F.col("_seed_id").alias("cluster"))
     )
-    # r14: pin the clustered vectors — vb feeds both pairwise sides
-    # and the final keep join (3 references).
+    # Pin the clustered vectors: vb feeds both pairwise sides and the
+    # final keep join (3 references).
     vb = withn.join(best, id_col).localCheckpoint(eager=True)
     a = vb.select(
         F.col("cluster").alias("_ca"),
@@ -1582,14 +1576,13 @@ def prefix_filter_pairs(
     Returns (id_a, id_b, jaccard) for pairs with J >= p/q.
     """
     p, q = threshold_frac
-    # r14: materialize the shingle pass ONCE (localCheckpoint). The
-    # frame is referenced by dfreq, the prefix ranking, and both sides
-    # of the verify join — unpinned, the scan + regex shingling
-    # pipeline recomputed up to 6x (12 parquet scans in the r13 plan,
-    # plans/r14/dedup_prefix_filter_before.txt; guide §1.2 "don't
-    # compute things you throw away"). At 100 TB this is the standard
-    # materialize-the-inverted-index step: O(corpus shingle) bytes on
-    # executor-local disk in exchange for one scan instead of six.
+    # Materialize the shingle pass ONCE (localCheckpoint). The frame
+    # is referenced by dfreq, the prefix ranking, and both sides of
+    # the verify join; unpinned, the scan + regex shingling pipeline
+    # recomputes up to 6x (12 parquet scans in the plan). At 100 TB
+    # this is the standard materialize-the-inverted-index step:
+    # O(corpus shingle) bytes on executor-local disk in exchange for
+    # one scan instead of six.
     sh = shingle(df, id_col=id_col, text_col=text_col, n=n).localCheckpoint(
         eager=True
     )
@@ -1610,10 +1603,10 @@ def prefix_filter_pairs(
             <= F.col("_sz") - F.expr(f"(_sz * {p} + {q - 1}) div {q}") + 1
         )
         .select("_id", "_g")
-        # r14: pin the prefix too — it feeds BOTH sides of the
-        # candidate self-join, and each side otherwise re-runs the
-        # dfreq join + rarity window (the two Window nodes in the
-        # before-plan). One window pass instead of two.
+        # Pin the prefix too: it feeds BOTH sides of the candidate
+        # self-join, and each side would otherwise re-run the dfreq
+        # join + rarity window (two Window nodes in the unpinned
+        # plan). One window pass instead of two.
         .localCheckpoint(eager=True)
     )
     cand = (
@@ -1624,7 +1617,7 @@ def prefix_filter_pairs(
         )
         .filter(F.col("id_a") < F.col("id_b"))
         .distinct()
-        # r14: spread the verify. AQE coalesces the distinct's
+        # Spread the verify. AQE coalesces the distinct's
         # exchange by BYTES, and candidate pairs are 16-byte rows —
         # a few MB — so the whole array_intersect verify (the
         # expensive stage: the arrays are attached AFTER this

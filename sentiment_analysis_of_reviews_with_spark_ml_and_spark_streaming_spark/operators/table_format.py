@@ -273,21 +273,24 @@ def _batch_ids_through(root: str, version: int) -> set[int]:
 # data-file helpers
 
 
-def _binary_string_cols(md) -> set[str]:
-    """Top-level string columns of a Spark-written parquet file whose
-    collation is ``UTF8_BINARY``, from the Spark schema Spark keeps in
-    the footer; empty when the file carries no Spark schema."""
-    from pyspark.sql.types import StringType
+def _driver_exact(dt) -> bool:
+    """Whether values of Spark type ``dt``, read from parquet on the
+    driver, compare and order exactly as Spark compares them: integer,
+    boolean, date and ``UTF8_BINARY`` string. Parquet, Arrow and Python
+    order strings as unsigned bytes, which is ``UTF8_BINARY`` order;
+    other collations compare differently. Excluded:
 
-    raw = (md.metadata or {}).get(b"org.apache.spark.sql.parquet.row.metadata")
-    if raw is None:
-        return set()
-    return {
-        f.name
-        for f in StructType.fromJson(json.loads(raw)).fields
-        if isinstance(f.dataType, StringType)
-        and f.dataType.collation == "UTF8_BINARY"
-    }
+    - floats: parquet stats EXCLUDE NaN while Spark's min/max order it
+      largest, and Spark's equality normalizes NaN and -0.0 where
+      Arrow's does not;
+    - timestamps: footer and Arrow values are UTC-normalized, Spark
+      renders them in the session zone."""
+    from pyspark.sql.types import (BooleanType, DateType, IntegralType,
+                                   StringType)
+
+    if isinstance(dt, StringType):
+        return dt.collation == "UTF8_BINARY"
+    return isinstance(dt, (IntegralType, BooleanType, DateType))
 
 
 def _footer_adds(
@@ -297,25 +300,18 @@ def _footer_adds(
     parquet FOOTERS just written — zero Spark jobs, where the read-back
     agg costs two on every write.
     Sound only where footer stats are exact and match Spark's agg
-    semantics bit-for-bit, so the gate admits integer, boolean, date
-    and ``UTF8_BINARY`` string stat columns and returns ``None`` (the
-    caller falls back to the Spark agg) for anything else:
-
-    - strings are exact because :func:`_write_data_files` writes with
-      ``parquet.statistics.truncate.length`` at its maximum, overriding
-      any session setting that would truncate min/max; values whose
-      min+max pass parquet's 4 KB stats limit get no min/max at all and
-      fall back below. Parquet orders strings as unsigned bytes, which
-      is Spark's ``UTF8_BINARY`` order (and Python's ``str`` order);
-      any other collation orders differently and falls back;
-    - floats: parquet stats EXCLUDE NaN while Spark's min/max order it
-      largest — footer bounds would unsoundly prune NaN-holding files;
-    - timestamps: footer values are UTC-normalized, Spark's agg renders
-      in the session zone — the rendered bounds could disagree.
+    semantics bit-for-bit, so the gate admits the stat columns whose
+    Spark type (from the Spark schema Spark keeps in the footer) passes
+    :func:`_driver_exact` and returns ``None`` (the caller falls back to
+    the Spark agg) for anything else. Strings are exact because
+    :func:`_write_data_files` writes with
+    ``parquet.statistics.truncate.length`` at its maximum, overriding
+    any session setting that would truncate min/max; values whose
+    min+max pass parquet's 4 KB stats limit get no min/max at all and
+    fall back below.
 
     Empty part files (committed by empty partitions) are removed here,
     mirroring the agg path's cleanup."""
-    import pyarrow as pa
     import pyarrow.parquet as pq
 
     adds: list[dict] = []
@@ -330,7 +326,15 @@ def _footer_adds(
         if md.num_rows == 0:
             os.remove(full)
             continue
-        schema = md.schema.to_arrow_schema()
+        raw = (md.metadata or {}).get(
+            b"org.apache.spark.sql.parquet.row.metadata"
+        )
+        if raw is None:
+            return None
+        spark_types = {
+            f.name: f.dataType
+            for f in StructType.fromJson(json.loads(raw)).fields
+        }
         # row-group column indices address parquet LEAVES (nested
         # structs flatten to dotted paths), NOT arrow's top-level
         # fields — resolve the stat col by its leaf path, which for a
@@ -344,18 +348,7 @@ def _footer_adds(
         stats: dict[str, list] = {}
         for c in stat_cols:
             idx = leaf_idx.get(c)
-            fi = schema.get_field_index(c)
-            if idx is None or fi < 0:
-                return None
-            t = schema.field(fi).type
-            if pa.types.is_string(t):
-                if c not in _binary_string_cols(md):
-                    return None
-            elif not (
-                pa.types.is_integer(t)
-                or pa.types.is_boolean(t)
-                or pa.types.is_date(t)
-            ):
+            if idx is None or not _driver_exact(spark_types.get(c)):
                 return None
             mins: list = []
             maxs: list = []
@@ -519,32 +512,61 @@ def _dv_table(positions: dict):
     })
 
 
-def _write_dv_mask(
-    matched: DataFrame, root: str, version: int, cands: list[dict]
-) -> tuple[list[dict], dict]:
-    """Mask the ``(_file, _pos)`` rows of ``matched`` — live rows of
-    ``cands`` — with deletion vectors: the MoR write path of every DML.
-    One Spark action collects the pairs through Arrow; the rest runs on
-    the driver. A file whose every row is now masked is removed
-    outright; the others' prior positions are unioned with the new ones
-    into ONE cumulative sidecar, written with pyarrow under ``data/`` so
-    vacuum's walk governs it like any data file. DV rows are
-    churn-bounded (mass deletes belong in copy-on-write mode), so the
-    pairs fit the driver. Returns (entries to remove, the commit's
-    ``dv`` map); both are empty when nothing matched."""
+def _displaced_pairs(root: str, cands: list[dict], key_col: str, keys):
+    """The ``(file, pos)`` pairs of the live rows of ``cands`` whose
+    ``key_col`` is in ``keys`` (an Arrow array of the table's key type
+    holding no NULL), found on the driver with no Spark job: each
+    file's key column is read alone, and a row's ordinal in the file is
+    its parquet ``_metadata.row_index`` across row groups. Positions the
+    file's current DV masks are dropped. Sound only for key types whose
+    Arrow equality is Spark's (:func:`_driver_exact`)."""
     import numpy as np
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    pairs = matched.select("_file", "_pos").toArrow()
+    hits = {}
+    for a in cands:
+        base = os.path.basename(a["path"])
+        col = pq.read_table(
+            os.path.join(root, a["path"]), columns=[key_col]
+        ).column(0).cast(keys.type)
+        pos = np.setdiff1d(
+            np.flatnonzero(pc.is_in(col, value_set=keys).to_numpy()),
+            _dv_positions(_sidecar_path(root, a), base),
+            assume_unique=True,
+        )
+        if len(pos):
+            hits[base] = pos
+    return _dv_table(hits)
+
+
+def _write_dv_mask(
+    pairs, root: str, version: int, cands: list[dict]
+) -> tuple[list[dict], dict]:
+    """Mask rows of ``cands`` with deletion vectors: the MoR write path
+    of every DML, run on the driver with no Spark job. ``pairs`` is an
+    Arrow table whose two columns are the file basename and the row
+    position of each newly masked row, none of them masked already
+    (MERGE finds them on the driver or collects them, DELETE and UPDATE
+    collect them with ``toArrow()``). A file whose every row is now
+    masked is removed outright; the others' prior positions are unioned
+    with the new ones into ONE cumulative sidecar, written with pyarrow
+    under ``data/`` so vacuum's walk governs it like any data file. DV
+    rows are churn-bounded (mass deletes belong in copy-on-write mode),
+    so the pairs fit the driver. Returns (entries to remove, the
+    commit's ``dv`` map); both are empty when nothing matched."""
+    import numpy as np
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
     by_base = {os.path.basename(a["path"]): a for a in cands}
     u = uuid.uuid4().hex[:8]
     sidecar = f"data/v{version:08d}-dv-{u}/dv-{u}.parquet"
-    files = pairs.column("_file")
+    files, positions = pairs.columns
     full, dv_map, cum = [], {}, {}
     for base in sorted(pc.unique(files).to_pylist()):
         a = by_base[base]
-        new = pairs.column("_pos").filter(pc.equal(files, base)).to_numpy()
+        new = positions.filter(pc.equal(files, base)).to_numpy()
         if a.get("dv", {}).get("rows", 0) + len(new) == a["rows"]:
             full.append(a)
             continue
@@ -585,6 +607,17 @@ def _meta_schema(st: StructType) -> StructType:
     )
 
 
+# Candidate rows up to which merge_upsert finds displaced rows on the
+# driver. Reading a file's key column and testing it with pc.is_in takes
+# ~90 ns a row for short string keys (4 vCPU), so 2M rows take ~0.2 s,
+# under the ~0.3 s fixed cost of the Spark semi-join's three jobs; past
+# that, Spark's parallel scan wins. The driver holds one file's key
+# column at a time. read_files broadcasts the DV pairs it anti-joins
+# only below the same count: both cap the rows of one MoR operation
+# that the driver takes on.
+_DRIVER_ROWS = 2_000_000
+
+
 def read_files(
     spark: SparkSession,
     root: str,
@@ -619,7 +652,7 @@ def read_files(
         df = _read(dvd, True)
         dv = _dv_rows(spark, root, dvd)
         n_dv = sum(e["dv"]["rows"] for e in dvd)
-        if n_dv < 2_000_000:
+        if n_dv < _DRIVER_ROWS:
             dv = F.broadcast(dv)
         df = df.join(
             dv,
@@ -886,6 +919,17 @@ def merge_upsert(
     change feed is exact under both modes (old row versions surface as
     ``deleted``, batch rows as ``inserted``).
 
+    A batch of up to 10,000 rows whose key type passes
+    :func:`_driver_exact` is pinned, its key column collected once with
+    ``toArrow()`` and counted on the driver; in ``mor`` mode the
+    displaced rows are then found on the driver too
+    (:func:`_displaced_pairs`), so the merge runs three Spark jobs: the
+    pin, the key collect and the batch write. Other key types and
+    larger batches take a grouped Spark collect for the keys; they, a
+    batch key typed unlike the table's and candidates above
+    ``_DRIVER_ROWS`` rows take a broadcast semi-join for the displaced
+    rows.
+
     Retries on :class:`CommitConflict` against the refreshed snapshot
     (optimistic concurrency) — a cow loser re-writes the merged output
     in full before re-planning; a mor loser re-writes only the batch
@@ -902,6 +946,9 @@ def merge_upsert(
     commit and makes replays idempotent: if any commit already carries
     this batch_id the merge is a no-op returning the current version.
     """
+    import pyarrow.compute as pc
+    from pyspark.sql.pandas.types import to_arrow_type
+
     if mode not in ("cow", "mor"):
         raise ValueError(f"mode must be 'cow' or 'mor', got {mode!r}")
     spark = updates.sparkSession
@@ -925,22 +972,36 @@ def merge_upsert(
     )
     if b["n"] == 0:  # truly empty update batch: no-op, no commit
         return latest_version(root)
-    # One bounded grouped collect answers both the duplicate-key check
-    # and the exact key set. NULL keys are left out of both: a NULL
-    # source key never equi-matches a target row (SQL join semantics),
-    # so any number of NULL-key rows are plain inserts, as in Delta's
-    # whenNotMatched.
-    non_null = updates.filter(F.col(key_col).isNotNull())
-    per_key = non_null.groupBy(key_col).agg(F.count(F.lit(1)).alias("_n"))
-    key_rows = per_key.limit(10_001).collect()
-    if len(key_rows) <= 10_000:
-        dup = [r for r in key_rows if r["_n"] > 1]
-    else:  # the bounded collect saw only part of the batch
-        dup = per_key.filter("_n > 1").limit(1).collect()
+    # The duplicate-key check and the exact key set come from one
+    # collect. NULL keys are left out of both: a NULL source key never
+    # equi-matches a target row (SQL join semantics), so any number of
+    # NULL-key rows are plain inserts, as in Delta's whenNotMatched.
+    key_type = updates.schema[key_col].dataType
+    keys = None  # the non-NULL batch keys as Arrow, for the driver match
+    if b["n"] <= 10_000 and _driver_exact(key_type):
+        # Arrow's equality is Spark's for these types, so the key column
+        # is counted on the driver
+        counts = pc.value_counts(
+            updates.select(key_col).toArrow().column(0).drop_null()
+        )
+        keys = counts.field("values")
+        dup = keys.filter(pc.greater(counts.field("counts"), 1)).to_pylist()
+        key_vals = keys.to_pylist()
+    else:
+        non_null = updates.filter(F.col(key_col).isNotNull())
+        per_key = non_null.groupBy(key_col).agg(F.count(F.lit(1)).alias("_n"))
+        key_rows = per_key.limit(10_001).collect()
+        if len(key_rows) <= 10_000:
+            key_vals = [r[key_col] for r in key_rows]
+            dup = [r[key_col] for r in key_rows if r["_n"] > 1]
+        else:  # the bounded collect saw only part of the batch
+            key_vals = None
+            dup = [r[key_col]
+                   for r in per_key.filter("_n > 1").limit(1).collect()]
     if dup:
         raise ValueError(
             f"updates batch has multiple rows for {key_col}="
-            f"{dup[0][key_col]!r}; MERGE requires unique source keys "
+            f"{dup[0]!r}; MERGE requires unique source keys "
             "(dedupe the batch first)"
         )
     if meta.get("checks"):
@@ -951,9 +1012,8 @@ def merge_upsert(
     # hull is used. An all-NULL batch has no keys, so candidates prune
     # to zero and the whole batch is inserts.
     bounds: dict[str, tuple] = {}
-    key_vals = None
-    if len(key_rows) <= 10_000:
-        key_vals = [_json_stat(r[key_col]) for r in key_rows]
+    if key_vals is not None:
+        key_vals = [_json_stat(v) for v in key_vals]
     else:
         bounds[key_col] = (_json_stat(b["lo"]), _json_stat(b["hi"]))
     for _ in range(max_retries):
@@ -991,14 +1051,21 @@ def merge_upsert(
             )
             full, dv_map = [], {}
             if cands:
-                displaced = read_files(
-                    spark, root, cands, st, with_meta=True
-                ).join(
-                    F.broadcast(updates.select(key_col)),
-                    on=key_col,
-                    how="left_semi",
-                )
-                full, dv_map = _write_dv_mask(displaced, root, v, cands)
+                if (keys is not None and st[key_col].dataType == key_type
+                        and sum(a["rows"] for a in cands) <= _DRIVER_ROWS):
+                    pairs = _displaced_pairs(
+                        root, cands, key_col,
+                        keys.cast(to_arrow_type(key_type)),
+                    )
+                else:
+                    pairs = read_files(
+                        spark, root, cands, st, with_meta=True
+                    ).join(
+                        F.broadcast(updates.select(key_col)),
+                        on=key_col,
+                        how="left_semi",
+                    ).select("_file", "_pos").toArrow()
+                full, dv_map = _write_dv_mask(pairs, root, v, cands)
             rec["add"] = mor_adds
             rec["remove"] = [a["path"] for a in full]
             rec["dv"] = dv_map
@@ -1294,7 +1361,7 @@ def _delete_attempt(
         return v
 
     # --- merge-on-read ---
-    full, dv_map = _write_dv_mask(matched, root, v, cands)
+    full, dv_map = _write_dv_mask(matched.toArrow(), root, v, cands)
     if not full and not dv_map:
         return base_v
     _write_commit(
@@ -1412,7 +1479,9 @@ def _update_attempt(
     if meta.get("checks"):
         _enforce_checks(updated, meta["checks"])
     adds = _write_data_files(updated, root, v, meta["stat_cols"])
-    full, dv_map = _write_dv_mask(matched, root, v, cands)
+    full, dv_map = _write_dv_mask(
+        matched.select("_file", "_pos").toArrow(), root, v, cands
+    )
     _write_commit(
         root,
         v,

@@ -253,6 +253,35 @@ def test_string_keyed_step_job_counts(spark, tmp_path):
     )
 
 
+def test_string_keyed_merge_into_dv_files_runs_three_jobs(spark, tmp_path):
+    """A string-keyed MoR merge into files that carry deletion vectors
+    runs the batch pin, one collect of the batch's key column and the
+    batch write; the duplicate check and the displaced rows are worked
+    out on the driver."""
+    src = str(tmp_path / "src")
+    tf.create_table(
+        _string_keyed(spark, "A", range(1000)).repartitionByRange(4, "rid"),
+        src, stat_cols=["rid"],
+    )
+    tf.merge_upsert(_string_keyed(spark, "PP", range(0, 1000, 7)), src,
+                    key_col="rid", mode="mor")
+    merged = set(range(5, 1000, 13))
+    merge_jobs = _jobs(
+        spark, "str-merge-driver",
+        lambda: tf.merge_upsert(_string_keyed(spark, "Q", sorted(merged)),
+                                src, key_col="rid", mode="mor"),
+    )
+    head = tf.snapshot_files(src)[0]
+    assert sum("dv" in a for a in head) >= 4
+    # with the grouped key collect and the Spark semi-join: 7
+    assert 0 < merge_jobs <= 3, merge_jobs
+    got = {r["rid"]: r["seg"] for r in tf.read_table(spark, src).collect()}
+    assert got == {
+        f"r{k:05d}": "Q" if k in merged else "PP" if k % 7 == 0 else "A"
+        for k in range(1000)
+    }
+
+
 def test_change_feed_over_layout_only_commits_is_empty(spark, tmp_path):
     """A range of compaction and clustering commits has an empty change
     feed with the feed's schema, planned without reading any file."""
