@@ -7,17 +7,30 @@ A **rollup view** is a grouped aggregate (COUNT + SUMs — the
 self-maintainable family; AVG derives as sum/count) materialized as its
 own lakehouse table. A **refresh** never re-scans the source snapshot:
 it reads the churn-proportional change-data-feed
-(:func:`.table_format.table_changes`) for the source versions since the
-last refresh, folds it into per-group *signed deltas*
+(:func:`.table_format.table_changes`, or its file-local change units)
+for the source versions since the last refresh, folds it into per-group *signed deltas*
 (``inserted → +1``, ``deleted → −1``), and copy-on-write-merges those
 deltas into the view at file granularity — only view files whose
 [min,max] range on the leading group key overlaps the churned keys are
 read or rewritten; the rest of the view is carried by reference.
 
-Cost model at 100 TB: a refresh is O(churned rows) to build the delta
-(one map-side-combined shuffle on the group keys) plus O(touched view
-files) to merge — never O(source) and never O(view). The delta is
-broadcast into the anti-join, so the merge adds no extra shuffle.
+Cost model: a refresh is O(churned rows) to build the delta plus
+O(touched view files) to merge — never O(source) and never O(view).
+Two executors serve those two steps under one plan/commit/retry loop:
+
+* **Driver fold** (small feeds): when the range holds only append,
+  merge-on-read, compaction and exact-restore commits, the change units
+  (``table_format._change_units``) are read with pyarrow, key and
+  measure columns only, and summed with an Arrow group-by; the delta is
+  then summed into the candidate view rows and written as one parquet
+  file with pyarrow. No Spark job: at a review batch's size a refresh
+  is otherwise bound by the fixed cost of its six jobs, not by data.
+* **Spark fold** (everything the driver gate refuses, see
+  :func:`_driver_delta`, and feeds or view slices above
+  ``table_format._DRIVER_ROWS`` rows): one map-side-combined shuffle
+  on the group keys builds the delta; the delta's keys are broadcast
+  into the anti-join that keeps untouched view rows, so the merge adds
+  no extra shuffle.
 
 Exact NULL fidelity with a full recompute: per SUM column the view
 stores a hidden non-null count (``_nn_<col>``), so a group whose
@@ -25,8 +38,8 @@ non-null inputs all departed reports SUM = NULL exactly as
 ``groupBy().agg(F.sum(c))`` would, and groups whose row count reaches
 zero are deleted from the view. Floating-point SUM columns accumulate
 in a different order than a recompute — bitwise equality holds for
-integer columns; doubles match to ulp-level tolerance (documented,
-tested).
+integer and decimal columns; doubles match to ulp-level tolerance
+(documented, tested), which is why they never take the driver fold.
 
 The maintenance spec (source root, group keys, sum columns) is recorded
 in the view's version-0 commit; each refresh commit records the source
@@ -35,6 +48,8 @@ and refresh is idempotent under optimistic-concurrency retries.
 """
 
 from __future__ import annotations
+
+import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import StructType
@@ -66,10 +81,11 @@ def _is_integral(dt) -> bool:
 
 def _widen(col, dt):
     """Integral SUM measures route through DECIMAL(38,0): a LONG sum
-    of a key-sized column overflows signed 64 bits at 100 TB volumes
-    (ANSI mode aborts the refresh) — found by the r9 sf1 scale-proof's
-    key-offset replication. Floats keep IEEE semantics; decimals
-    already widen to precision 38 under Spark's sum."""
+    of a key-sized column overflows signed 64 bits once a group holds a
+    few such values (ANSI mode would abort the create or the refresh),
+    while 38 digits hold any sum of up to 2^64 longs. The driver fold
+    sums in the same ``decimal128(38, 0)``. Floats keep IEEE semantics;
+    decimals already widen to precision 38 under Spark's sum."""
     if _is_integral(dt):
         return col.cast("decimal(38,0)")
     return col
@@ -319,6 +335,16 @@ def refresh_rollup(
     racing refresh that already folded ``head`` turns this call into a
     no-op rather than double-applying the delta.
 
+    Cost: building the delta is O(churned rows) and merging it is
+    O(candidate view rows). A small merge-on-read feed is folded on the
+    driver with Arrow and no Spark job (:func:`_driver_delta`,
+    :func:`_driver_apply`); a delta built there whose candidate view
+    files carry a deletion vector, or outgrow ``_DRIVER_ROWS`` with the
+    feed, is handed to the Spark merge as a local relation. Every other
+    refresh builds the delta with one shuffle and pins it; the merge
+    broadcasts the delta's keys into the anti-join, so it adds no
+    shuffle of its own.
+
     MIN/MAX columns: inserts fold as ``least``/``greatest``; a delete
     that touches or passes a stored extremum flags ONLY that group for
     a source re-aggregation confined to the flagged keys (broadcast
@@ -364,6 +390,108 @@ def refresh_rollup(
         state if not dim else {**state, "dim": {**dim, "version": dim_head}}
     )
 
+    k0 = keys[0]
+    driver = _driver_delta(state, head)
+    if driver is not None:
+        import pyarrow.compute as pc
+
+        delta, feed_rows = driver
+        lo_hi = pc.min_max(delta[k0]).as_py()
+        b = {"n": delta.num_rows, "lo": lo_hi["min"], "hi": lo_hi["max"],
+             "has_null": delta[k0].null_count}
+    else:
+        delta, b = _spark_delta(spark, state, new_state, head, dim_head)
+    ivm_rec = {"src_version": head}
+    if dim is not None:
+        ivm_rec["dim_version"] = dim_head
+    # the versions this plan folds FROM — if a racing refresh moves the
+    # view past this point, the pinned delta overlaps what it applied
+    # and replaying it would double-count (see _plan_stale).
+    planned = (
+        state["src_version"],
+        dim["version"] if dim else None,
+    )
+    if b["n"] == 0:
+        # nothing changed group-wise; still record the fold so the next
+        # refresh doesn't replay these source versions.
+        return _commit_noop_fold(
+            spark, view_root, ivm_rec, planned, max_retries=max_retries
+        )
+    # file [min,max] stats ignore NULLs, so a churned NULL-key group can
+    # live in ANY file — pruning is only sound when no delta key is NULL.
+    bounds = (
+        None
+        if b["lo"] is None or b["has_null"]
+        else (tfmt._json_stat(b["lo"]), tfmt._json_stat(b["hi"]))
+    )
+
+    meta = tfmt._table_meta(view_root)
+    delta_df = None if driver is not None else delta
+    for _ in range(max_retries):
+        if _already_folded(view_root, ivm_rec):
+            return tfmt.latest_version(view_root)  # racing refresh won
+        if _plan_stale(view_root, planned):
+            # a racing refresh folded a DIFFERENT (smaller) prefix: our
+            # delta starts at the OLD folded version, so applying it on
+            # the racer's snapshot would re-add the overlap. Rebuild the
+            # whole plan from the view's new state — bounded, because
+            # every such race means the racer made monotone progress.
+            return refresh_rollup(spark, view_root, max_retries=max_retries)
+        base_v = tfmt.latest_version(view_root)
+        live, schema = tfmt.snapshot_files(view_root, base_v)
+        if bounds is not None:
+            cands, _rest = tfmt._candidate_files(live, {k0: bounds}, k0)
+        else:
+            cands = live
+        st = StructType.fromJson(schema)
+        v = base_v + 1
+        if driver is not None and not any("dv" in a for a in cands) and (
+            feed_rows + sum(a["rows"] for a in cands) <= tfmt._DRIVER_ROWS
+        ):
+            adds = _driver_apply(
+                view_root, cands, delta, keys, sum_cols, st, v,
+                meta["stat_cols"],
+            )
+        else:
+            if delta_df is None:  # an Arrow delta the driver cannot apply
+                delta_df = spark.createDataFrame(delta)
+            old = tfmt.read_files(spark, view_root, cands, st)
+            merged = _apply_delta(
+                old, delta_df, keys, sum_cols, minmax_cols, st,
+                lambda rec_keys: _recompute_groups(
+                    spark, new_state, head, rec_keys, keys, sum_cols,
+                    minmax_cols,
+                ),
+            )
+            adds = tfmt._write_data_files(merged, view_root, v,
+                                          meta["stat_cols"])
+        try:
+            tfmt._write_commit(
+                view_root,
+                v,
+                {
+                    "version": v,
+                    "action": "ivm_refresh",
+                    "add": adds,
+                    "remove": [a["path"] for a in cands],
+                    "schema": None,
+                    "ivm": ivm_rec,
+                },
+            )
+        except tfmt.CommitConflict:
+            continue  # orphans reclaimed by vacuum; re-plan on new state
+        tfmt._maybe_checkpoint(view_root, v, meta.get("checkpoint_every", 10))
+        return v
+    raise tfmt.CommitConflict(f"refresh lost {max_retries} races at {view_root}")
+
+
+def _spark_delta(spark, state, new_state, head, dim_head):
+    """The signed per-group delta as a pinned Spark frame, plus its
+    size and leading-key bounds: one shuffle over the source change feed
+    (and, for star rollups, the dim churn feed)."""
+    src_root, keys, sum_cols = state["src_root"], state["keys"], state["sum_cols"]
+    minmax_cols = state["minmax_cols"]
+    dim = state.get("dim")
     feeds = []
     if head > state["src_version"]:
         feeds.append(
@@ -373,7 +501,7 @@ def refresh_rollup(
                 tfmt.table_changes(spark, src_root, state["src_version"], head),
             )
         )
-    if dim_advanced:
+    if dim is not None and dim_head > dim["version"]:
         feeds.append(_dim_churn_feed(spark, state, dim_head))
     changes = feeds[0]
     for extra in feeds[1:]:
@@ -418,7 +546,7 @@ def refresh_rollup(
     # and the probe are one action rather than a pin plus a separate
     # agg job over the checkpointed delta.
     k0 = keys[0]
-    delta, b = checkpoint_with_metrics(  # CDF replay is iterative; pin it
+    return checkpoint_with_metrics(  # CDF replay is iterative; pin it
         delta,
         "ivm_delta_bounds",
         F.count(F.lit(1)).alias("n"),
@@ -426,75 +554,140 @@ def refresh_rollup(
         F.max(k0).alias("hi"),
         F.max(F.col(k0).isNull().cast("int")).alias("has_null"),
     )
-    ivm_rec = {"src_version": head}
-    if dim is not None:
-        ivm_rec["dim_version"] = dim_head
-    # the versions this plan folds FROM — if a racing refresh moves the
-    # view past this point, the pinned delta overlaps what it applied
-    # and replaying it would double-count (see _plan_stale).
-    planned = (
-        state["src_version"],
-        dim["version"] if dim else None,
-    )
-    if b["n"] == 0:
-        # nothing changed group-wise; still record the fold so the next
-        # refresh doesn't replay these source versions.
-        return _commit_noop_fold(
-            spark, view_root, ivm_rec, planned, max_retries=max_retries
-        )
-    # file [min,max] stats ignore NULLs, so a churned NULL-key group can
-    # live in ANY file — pruning is only sound when no delta key is NULL.
-    bounds = (
-        None
-        if b["lo"] is None or b["has_null"]
-        else (tfmt._json_stat(b["lo"]), tfmt._json_stat(b["hi"]))
+
+
+def _group_sum(tbl, keys: list[str]):
+    """Sum every non-key column of the Arrow table ``tbl`` per group of
+    ``keys``, keeping the column names. Arrow's hash grouping puts NULL
+    keys in one group, as Spark's ``groupBy`` and the null-safe join of
+    :func:`_apply_delta` do."""
+    vals = [c for c in tbl.column_names if c not in keys]
+    out = tbl.group_by(keys).aggregate([(c, "sum") for c in vals])
+    return out.select(keys + [f"{c}_sum" for c in vals]).rename_columns(
+        keys + vals
     )
 
-    meta = tfmt._table_meta(view_root)
-    for _ in range(max_retries):
-        if _already_folded(view_root, ivm_rec):
-            return tfmt.latest_version(view_root)  # racing refresh won
-        if _plan_stale(view_root, planned):
-            # a racing refresh folded a DIFFERENT (smaller) prefix: our
-            # delta starts at the OLD folded version, so applying it on
-            # the racer's snapshot would re-add the overlap. Rebuild the
-            # whole plan from the view's new state — bounded, because
-            # every such race means the racer made monotone progress.
-            return refresh_rollup(spark, view_root, max_retries=max_retries)
-        base_v = tfmt.latest_version(view_root)
-        live, schema = tfmt.snapshot_files(view_root, base_v)
-        if bounds is not None:
-            cands, _rest = tfmt._candidate_files(live, {k0: bounds}, k0)
-        else:
-            cands = live
-        st = StructType.fromJson(schema)
-        old = tfmt.read_files(spark, view_root, cands, st)
-        merged = _apply_delta(
-            old, delta, keys, sum_cols, minmax_cols, st,
-            lambda rec_keys: _recompute_groups(
-                spark, new_state, head, rec_keys, keys, sum_cols, minmax_cols
-            ),
+
+def _driver_delta(state: dict, head: int):
+    """The signed per-group delta of the source commits
+    ``(last, head]`` built on the driver with Arrow, with the row count
+    of the files read for it — or ``None`` when the Spark fold must
+    build it. The columns are :func:`_spark_delta`'s. Exact, like the
+    Spark fold, because the gate admits only:
+
+    - no dim (a star rollup's feed is a join) and no MIN/MAX column
+      (its fold needs group-confined source recomputes);
+    - group keys whose Arrow equality and order are Spark's
+      (``table_format._driver_exact``);
+    - integral and decimal measures, summed in ``decimal128(38, scale)``
+      as :func:`_widen` sums them: an integer sum is exact in any
+      order, a float sum depends on the order;
+    - a range of append, merge-on-read, compaction and exact-restore
+      commits, so each change unit reads alone (``_change_units``
+      raises on a rewrite, whose survivors would have to be cancelled
+      across files);
+    - change units of at most ``table_format._DRIVER_ROWS`` file rows.
+    """
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    from pyspark.sql.pandas.types import to_arrow_type
+    from pyspark.sql.types import DecimalType
+
+    keys, sum_cols = state["keys"], state["sum_cols"]
+    if state.get("dim") or state["minmax_cols"]:
+        return None
+    st = StructType.fromJson(tfmt.snapshot_files(state["src_root"], head)[1])
+    if not all(tfmt._driver_exact(st[k].dataType) for k in keys) or not all(
+        _is_integral(st[c].dataType) or isinstance(st[c].dataType, DecimalType)
+        for c in sum_cols
+    ):
+        return None
+    try:
+        units = tfmt._change_units(state["src_root"], state["src_version"],
+                                   head)
+    except ValueError:
+        return None
+    feed_rows = sum(u.rows for u in units)
+    if feed_rows > tfmt._DRIVER_ROWS:
+        return None
+    read = pa.schema([(c, to_arrow_type(st[c].dataType))
+                      for c in dict.fromkeys(keys + sum_cols)])
+    acc = {c: pa.decimal128(38, getattr(st[c].dataType, "scale", 0))
+           for c in sum_cols}
+    schema = pa.schema(
+        [read.field(k) for k in keys] + [("_d_n", pa.int64())]
+        + [f for c in sum_cols
+           for f in ((f"_d_sum_{c}", acc[c]), (f"_d_nn_{c}", pa.int64()))]
+    )
+    parts = []
+    for u in units:
+        t = tfmt._read_change_unit(u, read)
+        sign = -1 if u.deleted else 1
+        cols = [t[k] for k in keys]
+        cols.append(pa.array(np.full(t.num_rows, sign, dtype=np.int64)))
+        for c in sum_cols:
+            signed = (t[c].cast(acc[c]).fill_null(0),
+                      pc.is_valid(t[c]).cast(pa.int64()))
+            cols += [pc.negate(x) for x in signed] if u.deleted else signed
+        parts.append(pa.table(cols, schema=schema))
+    delta = _group_sum(pa.concat_tables(parts or [schema.empty_table()]), keys)
+    # groups whose feed rows cancel exactly are no-ops on the view, as
+    # in the Spark fold's filter
+    changed = pc.not_equal(delta["_d_n"], 0)
+    for c in sum_cols:
+        changed = pc.or_(changed, pc.or_(
+            pc.not_equal(delta[f"_d_sum_{c}"], pa.scalar(0, acc[c])),
+            pc.not_equal(delta[f"_d_nn_{c}"], 0),
+        ))
+    return delta.filter(changed), feed_rows
+
+
+def _driver_apply(view_root, cands, delta, keys, sum_cols, st, version,
+                  stat_cols) -> list[dict]:
+    """:func:`_apply_delta` on the driver for an Arrow ``delta`` from
+    :func:`_driver_delta`: the candidate view rows (files without a
+    deletion vector) join the delta as one more set of signed rows, one
+    Arrow group-by sums both, and the groups left with rows are written
+    as one parquet file. Returns the file's add-entries."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    target = to_arrow_schema(st)
+    view_cols = {"n_rows": "_d_n"}
+    for c in sum_cols:
+        view_cols[_sum(c)] = f"_d_sum_{c}"
+        view_cols[_nn(c)] = f"_d_nn_{c}"
+    old = [
+        tfmt._read_change_unit(
+            tfmt.ChangeUnit("insert", os.path.join(view_root, a["path"]),
+                            version),
+            target,
         )
-        v = base_v + 1
-        adds = tfmt._write_data_files(merged, view_root, v, meta["stat_cols"])
-        try:
-            tfmt._write_commit(
-                view_root,
-                v,
-                {
-                    "version": v,
-                    "action": "ivm_refresh",
-                    "add": adds,
-                    "remove": [a["path"] for a in cands],
-                    "schema": None,
-                    "ivm": ivm_rec,
-                },
-            )
-        except tfmt.CommitConflict:
-            continue  # orphans reclaimed by vacuum; re-plan on new state
-        tfmt._maybe_checkpoint(view_root, v, meta.get("checkpoint_every", 10))
-        return v
-    raise tfmt.CommitConflict(f"refresh lost {max_retries} races at {view_root}")
+        for a in cands
+    ]
+    old = pa.concat_tables(old or [target.empty_table()])
+    old = pa.table(
+        [old[k].cast(delta.schema.field(k).type) for k in keys]
+        + [old[v].cast(delta.schema.field(d).type).fill_null(0)
+           for v, d in view_cols.items()],
+        schema=delta.schema,
+    )
+    new = _group_sum(pa.concat_tables([old, delta]), keys)
+    new = new.filter(pc.greater(new["_d_n"], 0))
+    cols = {k: new[k] for k in keys}
+    cols["n_rows"] = new["_d_n"]
+    for c in sum_cols:
+        nn, total = new[f"_d_nn_{c}"], new[f"_d_sum_{c}"]
+        cols[_nn(c)] = nn
+        # a group whose non-null inputs all departed sums to NULL
+        cols[_sum(c)] = pc.if_else(pc.greater(nn, 0), total,
+                                   pa.scalar(None, total.type))
+    return tfmt._write_arrow_file(
+        pa.table([cols[f.name].cast(f.type) for f in target], schema=target),
+        view_root, version, st, stat_cols,
+    )
 
 
 def _already_folded(view_root: str, ivm_rec: dict) -> bool:

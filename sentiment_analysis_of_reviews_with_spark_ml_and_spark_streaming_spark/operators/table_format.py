@@ -52,6 +52,7 @@ out of scope here, as it is for OSS Delta.
 
 from __future__ import annotations
 
+import dataclasses
 import datetime
 import json
 import os
@@ -273,6 +274,10 @@ def _batch_ids_through(root: str, version: int) -> set[int]:
 # data-file helpers
 
 
+# the footer key under which Spark's parquet writer records the Spark schema
+_SPARK_SCHEMA_KEY = "org.apache.spark.sql.parquet.row.metadata"
+
+
 def _driver_exact(dt) -> bool:
     """Whether values of Spark type ``dt``, read from parquet on the
     driver, compare and order exactly as Spark compares them: integer,
@@ -326,9 +331,7 @@ def _footer_adds(
         if md.num_rows == 0:
             os.remove(full)
             continue
-        raw = (md.metadata or {}).get(
-            b"org.apache.spark.sql.parquet.row.metadata"
-        )
+        raw = (md.metadata or {}).get(_SPARK_SCHEMA_KEY.encode())
         if raw is None:
             return None
         spark_types = {
@@ -429,6 +432,36 @@ def _write_data_files(
         if fname.endswith(".parquet") and fname not in referenced:
             os.remove(os.path.join(out_dir, fname))
     return sorted(adds, key=lambda a: a["path"])
+
+
+def _write_arrow_file(
+    tbl, root: str, version: int, st: StructType, stat_cols: list[str]
+) -> list[dict]:
+    """The driver twin of :func:`_write_data_files`: write the Arrow
+    table ``tbl`` (already of Spark schema ``st``'s Arrow types) with
+    pyarrow as ONE parquet file under ``data/v{version}-<uuid>/``, with
+    no Spark job, and return its add-entry (none for an empty table).
+    The footer carries ``st`` under the key Spark's own writer uses, so
+    every Spark reader and :func:`_footer_adds` see the same types.
+    Stats come from the table in memory; they are exact for stat columns
+    that pass :func:`_driver_exact`, which the caller guarantees."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    if tbl.num_rows == 0:
+        return []
+    rel = f"data/v{version:08d}-{uuid.uuid4().hex[:8]}"
+    os.makedirs(os.path.join(root, rel))
+    path = os.path.join(rel, f"part-00000-{uuid.uuid4()}.parquet")
+    pq.write_table(
+        tbl.replace_schema_metadata({_SPARK_SCHEMA_KEY: st.json()}),
+        os.path.join(root, path),
+    )
+    stats = {}
+    for c in stat_cols:
+        mm = pc.min_max(tbl[c]).as_py()
+        stats[c] = [_json_stat(mm["min"]), _json_stat(mm["max"])]
+    return [{"path": path, "rows": tbl.num_rows, "stats": stats}]
 
 
 def _json_stat(v):
@@ -857,6 +890,15 @@ def append(
     return v
 
 
+def _spark_order(v):
+    """Sort key that orders NaN above every number, as Spark orders
+    doubles (so a file holding NaN commits NaN as its max). A bare
+    ``<``/``<=`` with NaN is always false, which would prune the files
+    that hold NaN rows although Spark's equality matches NaN to NaN."""
+    nan = v != v
+    return (nan, 0.0 if nan else v)
+
+
 def _candidate_files(
     live: list[dict],
     bounds: dict[str, tuple],
@@ -864,33 +906,33 @@ def _candidate_files(
     values: list | None = None,
 ) -> tuple[list[dict], list[dict]]:
     """Split live files into (candidates, untouched) via stats overlap
-    with the update batch's [min,max] key range — or, when the exact
-    ``values`` are known (IN-list predicates, small MERGE batches),
-    per-value overlap: a sparse key set like {5, 999999} then prunes
-    every file strictly between the two keys, where the convex hull
-    would keep them all. A file with no stats for the key column is
-    always a candidate (correctness first)."""
-    if values is not None:
-        import bisect
+    with the update batch's [min,max] key range (``None`` leaves a side
+    open) — or, when the exact ``values`` are known (IN-list predicates,
+    small MERGE batches), per-value overlap: a sparse key set like
+    {5, 999999} then prunes every file strictly between the two keys,
+    where the convex hull would keep them all. A file with no stats for
+    the key column is always a candidate (correctness first). Values and
+    bounds compare in Spark's order (:func:`_spark_order`)."""
+    import bisect
 
-        vs = sorted(values)
-        cands, rest = [], []
-        for a in live:
-            st = a.get("stats", {}).get(key_col)
-            if st is None or st[0] is None:
-                cands.append(a)
-                continue
-            # any value within [min, max]? binary-search the sorted set
-            i = bisect.bisect_left(vs, st[0])
-            (cands if i < len(vs) and vs[i] <= st[1] else rest).append(a)
-        return cands, rest
-    lo, hi = bounds[key_col]
+    if values is not None:
+        vs = sorted(map(_spark_order, values))
+
+        def hit(lo_, hi_):  # any value within [min, max]?
+            i = bisect.bisect_left(vs, lo_)
+            return i < len(vs) and vs[i] <= hi_
+    else:
+        lo, hi = bounds[key_col]
+
+        def hit(lo_, hi_):
+            return ((hi is None or lo_ <= _spark_order(hi))
+                    and (lo is None or _spark_order(lo) <= hi_))
     cands, rest = [], []
     for a in live:
         st = a.get("stats", {}).get(key_col)
         if st is None or st[0] is None:
             cands.append(a)
-        elif st[0] <= hi and lo <= st[1]:
+        elif hit(_spark_order(st[0]), _spark_order(st[1])):
             cands.append(a)
         else:
             rest.append(a)
@@ -1305,15 +1347,7 @@ def _prune_by_predicate(
     bounds = _extract_bounds(predicate, prune_col)
     if bounds is None:
         return live
-    lo, hi = bounds
-    out = []
-    for a in live:
-        stat = a.get("stats", {}).get(prune_col)
-        if stat is None or stat[0] is None:
-            out.append(a)
-        elif (hi is None or stat[0] <= hi) and (lo is None or lo <= stat[1]):
-            out.append(a)
-    return out
+    return _candidate_files(live, {prune_col: bounds}, prune_col)[0]
 
 
 def _delete_attempt(
@@ -1662,6 +1696,196 @@ def _optimize_cluster_attempt(spark, root, by, target_files) -> int:
     )
     _maybe_checkpoint(root, v, meta.get("checkpoint_every", 10))
     return v
+
+
+# data-identical commit actions: zero logical row change by construction
+# (compact/cluster rewrite the same rows; a bloom index re-adds entries)
+_NOOP_ACTIONS = {"compact", "cluster", "index"}
+
+
+@dataclasses.dataclass(frozen=True)
+class ChangeUnit:
+    """One file-local piece of a change feed, readable on its own by
+    :func:`_read_change_unit`: a whole file inserted (minus ``dv_new``)
+    or deleted (minus its pre-commit ``dv_old``), the rows a commit newly
+    masks (``dv``: ``dv_new`` − ``dv_old``) or a restore un-masks
+    (``undv``: ``dv_old`` − ``dv_new``). Paths are absolute; ``rows`` is
+    the data file's row count, what reading the unit costs."""
+
+    kind: str  # "insert" | "delete" | "dv" | "undv"
+    path: str
+    version: int
+    rows: int = 0
+    dv_new: str | None = None
+    dv_old: str | None = None
+
+    @property
+    def deleted(self) -> bool:
+        return self.kind in ("delete", "dv")
+
+
+def _range_has_rewrite(root: str, v_from: int, v_to: int) -> bool:
+    """True when any commit in (``v_from``, ``v_to``) rewrote surviving
+    rows into new files (compact/cluster/cow/ivm/nested restore) —
+    the only case where a restore's removed and re-added file sets can
+    share row content. Over a clean append/mor range, a restore's
+    head-only removes retract exactly the rows inserted in the range
+    and its target-only adds return exactly fully-dropped files, so
+    file-local change units stay multiset-exact."""
+    for u in range(v_from + 1, v_to):
+        r = _read_commit(root, u)
+        act = r.get("action")
+        if act in _NOOP_ACTIONS or act in ("restore", "ivm_refresh"):
+            return True
+        if act in ("delete", "merge", "update") and r.get(
+            "write_mode", "cow"
+        ) != "mor":
+            return True
+    return False
+
+
+def _change_units(root: str, v_from: int, v_to: int) -> list[ChangeUnit]:
+    """Plan the change feed of (``v_from``, ``v_to``] as file-local
+    :class:`ChangeUnit` s, from the log alone. Exact at file/sidecar
+    granularity, which holds precisely when mutations are merge-on-read:
+    a mor commit's adds are pure new rows and its deletions are full
+    files or DV diffs, so no cross-file multiset cancellation is ever
+    needed and each unit can be read independently. Copy-on-write
+    delete/merge/update and IVM refresh rewrite surviving rows into new
+    files, so those commits raise ``ValueError`` (the same contract as
+    Delta CDF without CDC files; :func:`table_changes` is the exact feed
+    for them). Data-identical commits (compact/cluster/index) are
+    skipped; restore commits are planned per path (a file drops or
+    returns whole, DV differences are sidecar set algebra both ways) and
+    raise only when the restore crosses a rewrite, where removed and
+    re-added files may share content."""
+    pre = (
+        {a["path"]: a for a in snapshot_files(root, v_from)[0]}
+        if v_from >= 0
+        else {}
+    )
+
+    def _abs(rel):
+        return os.path.join(root, rel) if rel else None
+
+    def _unit(kind, v, entry, *, new=None, old=None):
+        return ChangeUnit(
+            kind, _abs(entry["path"]), v, entry.get("rows", 0),
+            dv_new=_abs(new and new.get("sidecar")),
+            dv_old=_abs(old and old.get("sidecar")),
+        )
+
+    units: list[ChangeUnit] = []
+    for v in range(v_from + 1, v_to + 1):
+        rec = _read_commit(root, v)
+        action = rec.get("action")
+        dv_items = rec.get("dv", {})
+        if action in _NOOP_ACTIONS:
+            pass  # zero logical change
+        elif action in ("delete", "merge", "update") and rec.get(
+            "write_mode", "cow"
+        ) != "mor":
+            raise ValueError(
+                f"commit {v} is a copy-on-write {action}: surviving rows "
+                "were rewritten into new files, so an exact row-level "
+                "change stream cannot be derived file-locally — write "
+                "with mode='mor' (deletion vectors) for streaming CDF, "
+                "or use table_changes() for the batch-exact feed"
+            )
+        elif action == "ivm_refresh" and (rec.get("add") or rec.get("remove")):
+            raise ValueError(
+                f"commit {v} is a view maintenance rewrite; stream the "
+                "SOURCE table's change feed instead, or use "
+                "table_changes() on the view"
+            )
+        elif action == "restore":
+            # per-path exact: a path present on both sides differs only
+            # in DV state — the sidecar set-difference both ways.
+            rem_set = set(rec.get("remove", []))
+            add_by_path = {a["path"]: a for a in rec.get("add", [])}
+            both = rem_set & set(add_by_path)
+            head_only = rem_set - both
+            target_only = set(add_by_path) - both
+            if head_only and target_only and _range_has_rewrite(
+                root, rec.get("restore_of", 0), v
+            ):
+                raise ValueError(
+                    f"commit {v} restores across a rewrite "
+                    "(compact/cluster/cow/ivm): removed and re-added "
+                    "files may share row content, which a file-local "
+                    "stream cannot cancel — use table_changes() for "
+                    "this range"
+                )
+            for p in sorted(head_only):
+                if p in pre:
+                    units.append(_unit("delete", v, pre[p],
+                                       old=pre[p].get("dv")))
+            for p in sorted(target_only):
+                a = add_by_path[p]
+                units.append(_unit("insert", v, a, new=a.get("dv")))
+            for p in sorted(both):
+                a = add_by_path[p]
+                old = pre.get(p, {}).get("dv")
+                units.append(_unit("dv", v, a, new=a.get("dv"), old=old))
+                units.append(_unit("undv", v, a, new=a.get("dv"), old=old))
+        else:
+            for p in rec.get("remove", []):
+                if p in pre:
+                    units.append(_unit("delete", v, pre[p],
+                                       old=pre[p].get("dv")))
+            for a in rec.get("add", []):
+                units.append(_unit("insert", v, a, new=a.get("dv")))
+            for p, d in dv_items.items():
+                if p in pre:
+                    units.append(_unit("dv", v, pre[p], new=d,
+                                       old=pre[p].get("dv")))
+        # roll pre-state forward
+        for p in rec.get("remove", []):
+            pre.pop(p, None)
+        for a in rec.get("add", []):
+            pre[a["path"]] = a
+        for p, d in dv_items.items():
+            if p in pre:
+                pre[p] = {**pre[p],
+                          "dv": {"sidecar": d["sidecar"], "rows": d["rows"]}}
+    return units
+
+
+def _read_change_unit(unit: ChangeUnit, schema):
+    """The rows ``unit`` contributes, as an Arrow table of the Arrow
+    ``schema``: only those columns are read, each cast to its type, and
+    a column an older file lacks comes back NULL (the schema-on-read
+    rule of :func:`read_table`). Row positions are the file's row
+    order, which a parquet read preserves across row groups."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pf = pq.ParquetFile(unit.path)
+    have = set(pf.schema_arrow.names)
+    tbl = pf.read(columns=[f.name for f in schema if f.name in have])
+    base = os.path.basename(unit.path)
+    if unit.kind in ("dv", "undv"):
+        new = _dv_positions(unit.dv_new, base)
+        old = _dv_positions(unit.dv_old, base)
+        mask = np.zeros(tbl.num_rows, dtype=bool)
+        mask[np.setdiff1d(new, old) if unit.kind == "dv"
+             else np.setdiff1d(old, new)] = True
+        tbl = tbl.filter(pa.array(mask))
+    else:
+        gone = _dv_positions(
+            unit.dv_new if unit.kind == "insert" else unit.dv_old, base
+        )
+        if len(gone):
+            mask = np.ones(tbl.num_rows, dtype=bool)
+            mask[gone] = False
+            tbl = tbl.filter(pa.array(mask))
+    n = tbl.num_rows
+    return pa.table(
+        [tbl.column(f.name).cast(f.type) if f.name in have
+         else pa.nulls(n, f.type) for f in schema],
+        schema=schema,
+    )
 
 
 def table_changes(

@@ -2131,3 +2131,33 @@ def test_starting_version_past_head_waits_not_regresses(spark, tmp_path):
     # versions 2 and 3 were asked to be skipped; only v4 flows
     assert got and {r["_commit_version"] for r in got} == {4}
     assert sorted(r["k"] for r in got) == list(range(40, 45))
+
+
+@pytest.mark.parametrize("mode", ["cow", "mor"])
+def test_merge_of_nan_key_replaces_the_nan_row(spark, tmp_path, mode):
+    """Spark's join equality matches NaN to NaN and its order puts NaN
+    above every number, so a file holding NaN commits NaN as its max.
+    Stats pruning compares in that order: a MERGE of a NaN key keeps
+    the file that holds the table's NaN row as a candidate and replaces
+    the row, and a range DELETE above a number reaches the NaN row."""
+    nan = float("nan")
+    root = str(tmp_path / "t")
+    tf.create_table(
+        spark.createDataFrame([(1.0, "A"), (nan, "A")], "x double, s string")
+        .coalesce(1),
+        root, stat_cols=["x"],
+    )
+    assert tf.snapshot_files(root)[0][0]["stats"]["x"][1] != (
+        tf.snapshot_files(root)[0][0]["stats"]["x"][1]
+    )  # the committed max is NaN
+    tf.merge_upsert(
+        spark.createDataFrame([(nan, "B")], "x double, s string"), root,
+        key_col="x", mode=mode,
+    )
+    got = sorted((str(r["x"]), r["s"])
+                 for r in tf.read_table(spark, root).collect())
+    assert got == [("1.0", "A"), ("nan", "B")]
+    tf.delete_where(spark, root, "x > 5", prune_col="x", mode=mode)
+    assert [(r["x"], r["s"]) for r in tf.read_table(spark, root).collect()] == [
+        (1.0, "A")
+    ]
