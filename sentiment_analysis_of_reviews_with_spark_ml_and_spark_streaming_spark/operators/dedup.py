@@ -17,6 +17,10 @@ Four tiers, each with a distinct scale/recall trade-off:
   expressions, value-identical to the model chain.
 - simhash: 64-bit simhash fingerprint from md5-derived token hashes,
   fully native expressions; near-dup = small hamming distance.
+
+The four MinHash generators and the SimHash pair joins share one
+banded-LSH kernel (``_minhash_bands``, ``_band_self_join``,
+``_agreeing_pairs``); each generator contributes only its hash family.
 """
 
 from __future__ import annotations
@@ -24,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.jdk_random import MINHASH_ML_PRIME, minhash_ml_coefficients
 from ..functions.text import tokenize_ws
 from . import textstats
 
@@ -167,6 +172,103 @@ def ngram_jaccard_pairs(
     return jac.filter(F.col("jaccard") >= threshold)
 
 
+# --- banded LSH kernel ------------------------------------------------
+# Each MinHash generator below builds one signature frame
+# (id, _m0 … _m{K-1}) with its own hash family and hands it to these
+# helpers; the SimHash pair generators hand in their fingerprint bands
+# (_simhash_bands). Banding, the band self-join, the pair dedup and
+# the agreement count exist once, so a fix to any of them reaches
+# every generator.
+
+
+def _check_banding(k: int, r: int, name: str = "num_hashes") -> None:
+    """Reject K < 1, r < 1 and K % r != 0 for K hashes banded r at a
+    time. Generators call it first, so bad arguments raise before any
+    Spark job runs (zero hashes would otherwise fail inside
+    ``groupBy().agg()``, r = 0 with a ZeroDivisionError, and ml_replay
+    only after pinning its signatures)."""
+    if k < 1 or r < 1 or k % r:
+        raise ValueError(
+            f"{name} must be a multiple of rows_per_band, both >= 1 "
+            f"(got {name}={k}, rows_per_band={r})"
+        )
+
+
+def _joined_key(*sigs):
+    """Band key of the oracle-replayed families: the ':'-joined values."""
+    return F.concat_ws(":", *sigs)
+
+
+def _ml_hash(i, a: int, b: int):
+    """MinHashLSH's published hash of sparse index ``i``:
+    ((1 + i) · a + b) mod HASH_PRIME, exact in longs (i, a < 2³¹)."""
+    return ((i.cast("long") + F.lit(1)) * F.lit(a) + F.lit(b)) % F.lit(
+        MINHASH_ML_PRIME
+    )
+
+
+def _minhash_bands(
+    sig: DataFrame, id_col: str, num_hashes: int, rows_per_band: int, band_key
+) -> DataFrame:
+    """(id, _m0 … _m{K-1}, band, key): one row per band of
+    ``rows_per_band`` consecutive signature columns, keyed by
+    ``band_key(*columns)``. The signature columns ride along for
+    :func:`_agreeing_pairs`; a self-join that does not carry them has
+    them pruned from the plan."""
+    sigs = [F.col(f"_m{k}") for k in range(num_hashes)]
+    r = rows_per_band
+    keys = [
+        F.struct(F.lit(b // r).alias("band"), band_key(*sigs[b : b + r]).alias("key"))
+        for b in range(0, num_hashes, r)
+    ]
+    return sig.select(
+        id_col, *sigs, F.explode(F.array(*keys)).alias("bk")
+    ).select(id_col, *sigs, "bk.band", "bk.key")
+
+
+def _band_self_join(
+    banded: DataFrame, id_col: str, carry=(), *, where=None, dedup=True
+) -> DataFrame:
+    """(id_a, id_b, <c>_a …, <c>_b …): the id_a < id_b pairs of a
+    (id, …, band, key) frame that share at least one (band, key), once
+    per pair. ``carry`` names per-doc columns (signatures, fingerprints)
+    both sides bring along; they are functions of the id, so the dedup
+    may keep any row of a pair. ``where`` is an exact verify over the
+    carried columns, applied before the dedup so Spark evaluates it in
+    the join and only verified pairs are shuffled. ``dedup=False``
+    keeps one row per shared band, for a caller that only needs one
+    side's ids and so no pair shuffle."""
+
+    def side(s: str) -> DataFrame:
+        cols = [F.col(c).alias(f"{c}_{s}") for c in carry]
+        return banded.select(F.col(id_col).alias(f"id_{s}"), *cols, "band", "key")
+
+    ordered = F.col("id_a") < F.col("id_b")
+    pairs = (
+        side("a")
+        .join(side("b"), ["band", "key"])
+        .filter(ordered if where is None else ordered & where)
+        .drop("band", "key")
+    )
+    return pairs.dropDuplicates(["id_a", "id_b"]) if dedup else pairs
+
+
+def _agreeing_pairs(
+    sig: DataFrame, id_col: str, num_hashes: int, rows_per_band: int, band_key
+) -> DataFrame:
+    """(id_a, id_b, n_agree: int): band collisions of a signature
+    frame with the number of signature positions the pair agrees on
+    (the MinHash estimate of Jaccard is n_agree / K)."""
+    sigs = [f"_m{k}" for k in range(num_hashes)]
+    banded = _minhash_bands(sig, id_col, num_hashes, rows_per_band, band_key)
+    n_agree = sum(
+        F.when(F.col(f"{c}_a") == F.col(f"{c}_b"), 1).otherwise(0) for c in sigs
+    )
+    return _band_self_join(banded, id_col, sigs).select(
+        "id_a", "id_b", n_agree.alias("n_agree")
+    )
+
+
 def minhash_lsh_candidates(
     df: DataFrame,
     *,
@@ -207,12 +309,15 @@ def minhash_lsh_candidates(
       ((1 + i) · aₜ + bₜ) mod HASH_PRIME`` with the seeded JDK-LCG
       (aₜ, bₜ) draws replayed by functions/jdk_random.py — the exact
       published formula, computed per row with array HOFs (exact in
-      long arithmetic: i < 2¹⁸, a < 2³¹; no shuffle at all).
-    - approxSimilarityJoin: posexplode hashes → equi-join on
-      (position, value) → distinct pairs → keyDistance =
-      1 − |A∩B|/|A∪B| on the index SETS → STRICT < threshold. Same
-      steps, same float arithmetic; the pair-dedup now shuffles
-      16-byte id pairs instead of struct-wrapped vectors.
+      long arithmetic: i < 2¹⁸, a < 2³¹; no shuffle at all). This is
+      the generator's hash family; the rest is the banded-LSH kernel.
+    - approxSimilarityJoin: the kernel's single-signature bands
+      (:func:`_minhash_bands` with r = 1, the bare value as key) →
+      equi-join on (band, value) → distinct pairs
+      (:func:`_band_self_join`) → keyDistance = 1 − |A∩B|/|A∪B| on the
+      index SETS → STRICT < threshold. Same steps, same float
+      arithmetic; the pair-dedup shuffles 16-byte id pairs instead of
+      struct-wrapped vectors.
 
     End-to-end row equality vs the live ml.feature chain is pinned in
     tests/test_minhash_native_rewrite.py; the DuckDB oracle replays
@@ -220,12 +325,7 @@ def minhash_lsh_candidates(
     """
     from pyspark.ml.feature import HashingTF
 
-    from ..functions.jdk_random import (
-        MINHASH_ML_PRIME,
-        minhash_ml_coefficients,
-    )
-
-    p = MINHASH_ML_PRIME
+    _check_banding(num_hash_tables, 1, "num_hash_tables")
     coeffs = minhash_ml_coefficients(seed, num_hash_tables)
     sh = shingle(df, id_col=id_col, text_col=text_col, n=n)
     tf = HashingTF(
@@ -234,13 +334,7 @@ def minhash_lsh_candidates(
     feat = tf.transform(sh).filter(F.size("shingles") > 0)
 
     def _sig(a: int, b: int):
-        return F.array_min(
-            F.transform(
-                "_idx",
-                lambda i: ((i.cast("long") + F.lit(1)) * F.lit(a) + F.lit(b))
-                % F.lit(p),
-            )
-        )
+        return F.array_min(F.transform("_idx", lambda i: _ml_hash(i, a, b)))
 
     # one projection produces the index SET (keyDistance input) and
     # all num_hash_tables signatures. Pinned: the band self-join
@@ -258,32 +352,14 @@ def minhash_lsh_candidates(
         )
         .localCheckpoint(eager=True)
     )
-    bands = doc.select(
-        F.col(id_col),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(t).alias("t"), F.col(f"_m{t}").alias("v")
-                    )
-                    for t in range(num_hash_tables)
-                ]
-            )
-        ).alias("bk"),
-    ).select(id_col, F.col("bk.t").alias("_t"), F.col("bk.v").alias("_v"))
-    cand = (
-        bands.select(F.col(id_col).alias("id_a"), "_t", "_v")
-        .join(bands.select(F.col(id_col).alias("id_b"), "_t", "_v"), ["_t", "_v"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .dropDuplicates(["id_a", "id_b"])
+    cand = _band_self_join(
+        _minhash_bands(doc, id_col, num_hash_tables, 1, lambda m: m), id_col
     )
-    sets = doc.select(F.col(id_col), "_idx")
     joined = cand.join(
-        sets.select(F.col(id_col).alias("id_a"), F.col("_idx").alias("_ia")),
+        doc.select(F.col(id_col).alias("id_a"), F.col("_idx").alias("_ia")),
         "id_a",
     ).join(
-        sets.select(F.col(id_col).alias("id_b"), F.col("_idx").alias("_ib")),
+        doc.select(F.col(id_col).alias("id_b"), F.col("_idx").alias("_ib")),
         "id_b",
     )
     inter = F.size(F.array_intersect("_ia", "_ib")).cast("double")
@@ -307,10 +383,12 @@ def minhash_native_candidates(
 ) -> DataFrame:
     """Native banded MinHash — no ml.feature, 100% whole-stage codegen.
 
-    Pipeline: explode shingles → K seeded xxhash64 → min per seed (ONE
-    shuffle, map-side combined, carries only (id, K longs)) → band
-    signatures → self-join on (band, signature) → estimated Jaccard =
-    fraction of agreeing minhashes. Returns (id_a, id_b, est_jaccard).
+    Hash family: explode shingles → K seeded xxhash64 → min per seed
+    (ONE shuffle, map-side combined, carries only (id, K longs)). The
+    banded-LSH kernel (:func:`_agreeing_pairs`) bands the K signatures
+    ``rows_per_band`` at a time under an xxhash64 band key, self-joins
+    on (band, key) and counts agreeing minhashes; estimated Jaccard =
+    that fraction. Returns (id_a, id_b, est_jaccard).
 
     vs ``minhash_lsh_candidates`` (ml.feature): same candidate
     semantics but the signature build never leaves codegen and the
@@ -318,9 +396,7 @@ def minhash_native_candidates(
     ``ngram_jaccard_pairs`` on these candidates as the verify stage.
     Recall for similarity j: 1-(1-j^r)^(K/r) with r=rows_per_band.
     """
-    if num_hashes % rows_per_band:
-        raise ValueError("num_hashes must be a multiple of rows_per_band")
-    n_bands = num_hashes // rows_per_band
+    _check_banding(num_hashes, rows_per_band)
     # Hash each shingle STRING once; derive the K family members by
     # re-hashing the fixed-width 8-byte value (cheap) rather than the
     # string (expensive). One shuffle carrying (id, K longs).
@@ -333,7 +409,7 @@ def minhash_native_candidates(
     ).select(F.col(id_col), F.xxhash64("_s").alias("_h0"))
     sig = exploded.groupBy(id_col).agg(
         *[
-            F.min(F.xxhash64(F.col("_h0"), F.lit(k))).alias(f"_h{k}")
+            F.min(F.xxhash64(F.col("_h0"), F.lit(k))).alias(f"_m{k}")
             for k in range(num_hashes)
         ]
         # Not pinned, though the band self-join re-runs the scan →
@@ -346,52 +422,10 @@ def minhash_native_candidates(
         # scans vs one executor-local write); revisit with cluster
         # numbers, not local ones.
     )
-    bands = sig.select(
-        F.col(id_col),
-        *[F.col(f"_h{k}") for k in range(num_hashes)],
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.xxhash64(
-                            *[
-                                F.col(f"_h{b * rows_per_band + r}")
-                                for r in range(rows_per_band)
-                            ]
-                        ).alias("sig"),
-                    )
-                    for b in range(n_bands)
-                ]
-            )
-        ).alias("bk"),
-    ).select(id_col, *[f"_h{k}" for k in range(num_hashes)], "bk.band", "bk.sig")
-    a = bands.select(
-        F.col(id_col).alias("id_a"),
-        *[F.col(f"_h{k}").alias(f"_a{k}") for k in range(num_hashes)],
-        "band",
-        "sig",
-    )
-    b = bands.select(
-        F.col(id_col).alias("id_b"),
-        *[F.col(f"_h{k}").alias(f"_b{k}") for k in range(num_hashes)],
-        "band",
-        "sig",
-    )
-    cand = (
-        a.join(b, on=["band", "sig"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .drop("band", "sig")
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    agree = sum(
-        F.when(F.col(f"_a{k}") == F.col(f"_b{k}"), 1).otherwise(0)
-        for k in range(num_hashes)
-    )
-    return (
-        cand.withColumn("est_jaccard", agree / F.lit(float(num_hashes)))
-        .filter(F.col("est_jaccard") >= min_est_jaccard)
-        .select("id_a", "id_b", "est_jaccard")
+    pairs = _agreeing_pairs(sig, id_col, num_hashes, rows_per_band, F.xxhash64)
+    est = F.col("n_agree").cast("double") / F.lit(float(num_hashes))
+    return pairs.select("id_a", "id_b", est.alias("est_jaccard")).filter(
+        F.col("est_jaccard") >= min_est_jaccard
     )
 
 
@@ -442,34 +476,29 @@ def minhash_portable_candidates(
 ) -> DataFrame:
     """Banded MinHash with an engine-portable hash family (oracle-able).
 
-    Same banded-candidate semantics and plan shape as
-    :func:`minhash_native_candidates` — explode shingles → K hashes →
-    min per hash (ONE map-side-combined shuffle carrying (id, K ints))
-    → band signatures → equi-join on (band, signature) — but the hash
-    family is replayable outside the JVM: base hash is the first 15 hex
-    chars of md5(shingle) (60 bits, the same device the simhash
-    promotion used) reduced mod p = 2^31-1, and member k is
-    ``(a_k * base + b_k) mod p`` with :func:`minhash_portable_coeffs`
-    literals. A DuckDB twin recomputes identical signatures, bands and
-    pairs, turning the whole LSH pipeline — not just its exact-verify
-    stage — into a value-hash-checked query. Band signature is the
-    ':'-joined member values (string equi-join key, no extra hash).
+    Banding, the (band, key) self-join and the agreement count are the
+    banded-LSH kernel (:func:`_agreeing_pairs`); this generator
+    contributes only a hash family that is replayable outside the JVM:
+    base hash is the first 15 hex chars of md5(shingle) (60 bits, the
+    same device the simhash promotion used) reduced mod p = 2^31-1,
+    and member k is ``(a_k * base + b_k) mod p`` with
+    :func:`minhash_portable_coeffs` literals, min per member in ONE
+    map-side-combined shuffle carrying (id, K ints). A DuckDB twin
+    recomputes identical signatures, bands and pairs, turning the
+    whole LSH pipeline — not just its exact-verify stage — into a
+    value-hash-checked query. Band key is the ':'-joined member values
+    (string equi-join key, no extra hash).
 
     Returns (id_a, id_b, est_jaccard) with est_jaccard = fraction of
     agreeing minhashes, filtered to >= min_est_jaccard. Recall for true
     similarity j: 1-(1-j^r)^(K/r), identical to the native variant.
     """
-    if num_hashes % rows_per_band:
-        raise ValueError("num_hashes must be a multiple of rows_per_band")
-    n_bands = num_hashes // rows_per_band
+    _check_banding(num_hashes, rows_per_band)
     coeffs = minhash_portable_coeffs(num_hashes, seed)
     p = MINHASH_PORTABLE_PRIME
     sh = shingle(df, id_col=id_col, text_col=text_col, n=n)
     base = sh.select(F.col(id_col), F.explode("shingles").alias("_s")).select(
-        F.col(id_col),
-        (
-            textstats.md5_prefix_long("_s") % p
-        ).alias("_h0"),
+        F.col(id_col), (textstats.md5_prefix_long("_s") % p).alias("_h0")
     )
     sig = base.groupBy(id_col).agg(
         *[
@@ -477,55 +506,10 @@ def minhash_portable_candidates(
             for k, (a, b) in enumerate(coeffs)
         ]
     )
-    bands = sig.select(
-        F.col(id_col),
-        *[F.col(f"_m{k}") for k in range(num_hashes)],
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.concat_ws(
-                            ":",
-                            *[
-                                F.col(f"_m{b * rows_per_band + r}")
-                                for r in range(rows_per_band)
-                            ],
-                        ).alias("sig"),
-                    )
-                    for b in range(n_bands)
-                ]
-            )
-        ).alias("bk"),
-    ).select(id_col, *[f"_m{k}" for k in range(num_hashes)], "bk.band", "bk.sig")
-    a_side = bands.select(
-        F.col(id_col).alias("id_a"),
-        *[F.col(f"_m{k}").alias(f"_a{k}") for k in range(num_hashes)],
-        "band",
-        "sig",
-    )
-    b_side = bands.select(
-        F.col(id_col).alias("id_b"),
-        *[F.col(f"_m{k}").alias(f"_b{k}") for k in range(num_hashes)],
-        "band",
-        "sig",
-    )
-    cand = (
-        a_side.join(b_side, on=["band", "sig"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .drop("band", "sig")
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    agree = sum(
-        F.when(F.col(f"_a{k}") == F.col(f"_b{k}"), 1).otherwise(0)
-        for k in range(num_hashes)
-    )
-    return (
-        cand.withColumn(
-            "est_jaccard", agree.cast("double") / F.lit(float(num_hashes))
-        )
-        .filter(F.col("est_jaccard") >= min_est_jaccard)
-        .select("id_a", "id_b", "est_jaccard")
+    pairs = _agreeing_pairs(sig, id_col, num_hashes, rows_per_band, _joined_key)
+    est = F.col("n_agree").cast("double") / F.lit(float(num_hashes))
+    return pairs.select("id_a", "id_b", est.alias("est_jaccard")).filter(
+        F.col("est_jaccard") >= min_est_jaccard
     )
 
 
@@ -557,16 +541,16 @@ def minhash_ml_replay_candidates(
     SQL — promoting the ml.feature hash chain itself to a
     value-hash-checked surface.
 
-    Banding is r = 2 (``rows_per_band`` signatures per band, the
-    :func:`minhash_portable_candidates` shape): single-signature
-    banding (approxSimilarityJoin's r = 1) fires at probability j per
-    table even for unrelated pairs, which measured 82k candidate
-    pairs / 13 s at sf0.1 — r = 2 drops incidental collisions to j²
-    per band while every signature value still flows through the
-    band keys AND the n_agree surface, so the certification power is
-    identical. Returns (id_a, id_b, n_agree) with n_agree = number of
-    agreeing signature positions — an integer-only surface (no float
-    kinds for the driver's hasher).
+    Banding is the banded-LSH kernel (:func:`_agreeing_pairs`) with
+    r = 2 ``rows_per_band`` signatures per band and ':'-joined band
+    keys: single-signature banding (approxSimilarityJoin's r = 1)
+    fires at probability j per table even for unrelated pairs, which
+    measured 82k candidate pairs / 13 s at sf0.1 — r = 2 drops
+    incidental collisions to j² per band while every signature value
+    still flows through the band keys AND the n_agree surface, so the
+    certification power is identical. Returns (id_a, id_b, n_agree)
+    with n_agree = number of agreeing signature positions — an
+    integer-only surface (no float kinds for the driver's hasher).
 
     No sparse-vector assembly UDF and no ``MinHashLSH.fit/transform``
     run here: the signatures come from
@@ -580,11 +564,7 @@ def minhash_ml_replay_candidates(
     in longs (i < HASH_PRIME < 2³¹, a < 2³¹ ⇒ products < 2⁶²), so the
     values are identical to the model's double-carried integers.
     """
-    from ..functions.jdk_random import (
-        MINHASH_ML_PRIME,
-        minhash_ml_coefficients,
-    )
-
+    _check_banding(num_hash_tables, rows_per_band, "num_hash_tables")
     p = MINHASH_ML_PRIME
     coeffs = minhash_ml_coefficients(seed, num_hash_tables)
     sh = shingle(df, id_col=id_col, text_col=text_col, n=n)
@@ -603,66 +583,14 @@ def minhash_ml_replay_candidates(
         exploded.groupBy(id_col)
         .agg(
             *[
-                F.min(
-                    ((F.col("_i") + F.lit(1)) * F.lit(a) + F.lit(b))
-                    % F.lit(p)
-                ).alias(f"_m{t}")
+                F.min(_ml_hash(F.col("_i"), a, b)).alias(f"_m{t}")
                 for t, (a, b) in enumerate(coeffs)
             ]
         )
         .localCheckpoint(eager=True)
     )
-    if num_hash_tables % rows_per_band:
-        raise ValueError("num_hash_tables must be a multiple of rows_per_band")
-    n_bands = num_hash_tables // rows_per_band
-    bands = sig.select(
-        F.col(id_col),
-        *[F.col(f"_m{t}") for t in range(num_hash_tables)],
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("t"),
-                        F.concat_ws(
-                            ":",
-                            *[
-                                F.col(f"_m{b * rows_per_band + r}")
-                                for r in range(rows_per_band)
-                            ],
-                        ).alias("v"),
-                    )
-                    for b in range(n_bands)
-                ]
-            )
-        ).alias("bk"),
-    ).select(
-        id_col, *[f"_m{t}" for t in range(num_hash_tables)], "bk.t", "bk.v"
-    )
-    a_side = bands.select(
-        F.col(id_col).alias("id_a"),
-        *[F.col(f"_m{t}").alias(f"_a{t}") for t in range(num_hash_tables)],
-        "t",
-        "v",
-    )
-    b_side = bands.select(
-        F.col(id_col).alias("id_b"),
-        *[F.col(f"_m{t}").alias(f"_b{t}") for t in range(num_hash_tables)],
-        "t",
-        "v",
-    )
-    cand = (
-        a_side.join(b_side, on=["t", "v"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .drop("t", "v")
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    agree = sum(
-        F.when(F.col(f"_a{t}") == F.col(f"_b{t}"), 1).otherwise(0)
-        for t in range(num_hash_tables)
-    )
-    return cand.select(
-        "id_a", "id_b", agree.cast("long").alias("n_agree")
-    )
+    pairs = _agreeing_pairs(sig, id_col, num_hash_tables, rows_per_band, _joined_key)
+    return pairs.select("id_a", "id_b", F.col("n_agree").cast("long"))
 
 
 def duplicate_spans(
@@ -1054,25 +982,14 @@ def simhash_near_dup_pairs(
     fps = simhash(df, id_col=id_col, text_col=text_col).localCheckpoint(
         eager=True
     )
-    banded = _simhash_bands(fps, id_col, bands)
-    a = banded.select(
-        F.col(id_col).alias("id_a"), F.col("simhash").alias("sh_a"), "band", "key"
+    hamming = F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b")))
+    cand = _band_self_join(
+        _simhash_bands(fps, id_col, bands),
+        id_col,
+        ["simhash"],
+        where=hamming <= max_hamming,
     )
-    b = banded.select(
-        F.col(id_col).alias("id_b"), F.col("simhash").alias("sh_b"), "band", "key"
-    )
-    cand = (
-        a.join(b, on=["band", "key"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", "sh_a", "sh_b")
-        .distinct()
-    )
-    hamming = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
-    return (
-        cand.withColumn("hamming", hamming)
-        .filter(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
-    )
+    return cand.select("id_a", "id_b", hamming.alias("hamming"))
 
 
 def connected_components(
@@ -1499,21 +1416,17 @@ def incremental_near_dedup(
     def banded(df: DataFrame, id_name: str, fp_name: str) -> DataFrame:
         return _simhash_bands(df, id_name, bands, fp_col=fp_name)
 
-    b = banded(fps, id_col, "simhash")
     # batch-internal: drop any id with a lower-id near-dup in the batch
-    a_side = b.select(
-        F.col(id_col).alias("_ida"), F.col("simhash").alias("_fpa"), "band", "key"
-    )
-    b_side = b.select(
-        F.col(id_col).alias("_idb"), F.col("simhash").alias("_fpb"), "band", "key"
-    )
     internal_drops = (
-        a_side.join(b_side, ["band", "key"])
-        .filter(F.col("_ida") < F.col("_idb"))
-        .filter(
-            F.bit_count(F.col("_fpa").bitwiseXOR(F.col("_fpb"))) <= max_hamming
+        _band_self_join(
+            banded(fps, id_col, "simhash"),
+            id_col,
+            ["simhash"],
+            where=F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b")))
+            <= max_hamming,
+            dedup=False,
         )
-        .select(F.col("_idb").alias(id_col))
+        .select(F.col("id_b").alias(id_col))
         .distinct()
     )
     survivors = fps.join(internal_drops, id_col, "left_anti")

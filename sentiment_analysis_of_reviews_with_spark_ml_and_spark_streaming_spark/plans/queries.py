@@ -3845,12 +3845,13 @@ FROM pairs WHERE inter / (sz_a + sz_b - inter) >= 0.2
 
 def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash-LSH candidate pairs — the 100 TB dedup path
-    (shingle → HashingTF indices → MinHashLSH-semantics banding; since
-    r15 everything after HashingTF is native expressions,
-    value-identical to the old fit/transform/approxSimilarityJoin
-    chain — see operators/dedup.minhash_lsh_candidates).
+    (shingle → HashingTF indices → MinHashLSH-semantics banding;
+    everything after HashingTF is native expressions, value-identical
+    to the fit/transform/approxSimilarityJoin chain, because that chain
+    runs its hash functions as a per-row vector UDF twice and dedups
+    pairs over whole vectors — see operators/dedup.minhash_lsh_candidates).
 
-    Oracle-backed since r13: the DuckDB twin replays the ENTIRE
+    Oracle-backed: the DuckDB twin replays the ENTIRE
     ml.feature hash chain from first principles — murmur3_x86_32 over
     each shingle's UTF-8 bytes computed byte-exactly in SQL
     (hex(encode(term)) chunked little-endian through a list_reduce of
@@ -4079,7 +4080,7 @@ FROM regions r JOIN toks t USING (doc_id)
 
 
 def q_duplicate_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact-substring dedup as a transform (r4; Lee et al. 2021 §4):
+    """Exact-substring dedup as a transform (Lee et al. 2021 §4):
     duplicated ≥5-token maximal spans are EXCISED from every
     occurrence but the first (canonical = min (doc_id, span_start) per
     span hash). Emits per-doc token counts and the md5 of the cleaned
@@ -4171,7 +4172,7 @@ def q_dedup_pipeline_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 
-# --- XXH64 replayed in DuckDB SQL (r13; converts dedup_minhash_native) ----
+# --- XXH64 replayed in DuckDB SQL (the oracle of dedup_minhash_native) ---
 #
 # Spark's xxhash64 is the published XXH64 (Collet) with seed 42:
 # the native MinHash family is xxhash64(shingle_string) re-keyed as
@@ -4349,7 +4350,7 @@ def q_dedup_minhash_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Native banded MinHash (no ml.feature, 100% codegen): candidate
     pairs with estimated Jaccard.
 
-    Oracle-backed since r13: the DuckDB twin replays the FULL xxhash64
+    Oracle-backed: the DuckDB twin replays the FULL xxhash64
     family from the published XXH64 spec — string hash over each
     shingle's UTF-8 bytes (stripe accumulators, every tail length),
     then hashInt(k, hashLong(h0, 42)) for the 32 re-keyed family
@@ -4439,7 +4440,7 @@ SQL_DEDUP_MINHASH_NATIVE = _minhash_native_oracle_sql()
 
 def q_dedup_minhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Banded MinHash with the engine-portable Carter-Wegman family
-    (r4): same banded plan shape as dedup_minhash_native, but the hash
+    — the same banded-LSH kernel as dedup_minhash_native, but the hash
     family (md5-based 60-bit shingle hash reduced mod 2^31-1, then
     a_k·x+b_k mod p members) is replayed exactly by the DuckDB twin —
     promoting the LSH candidate-generation stage itself, not just its
@@ -4516,8 +4517,9 @@ SQL_DEDUP_MINHASH_PORTABLE = _minhash_portable_oracle_sql()
 
 
 def q_dedup_minhash_ml_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The ml.feature MinHashLSH hash chain, driver-certified (VERDICT
-    r12 #2): real MinHashLSH signatures over an oracle-replayable
+    """The ml.feature MinHashLSH hash chain, driver-certified so that
+    a Spark change to it fails a value check: real MinHashLSH
+    signatures over an oracle-replayable
     (md5-based) index space, banded r = 2 (the portable twin's
     shape; see minhash_ml_replay_candidates for why not
     approxSimilarityJoin's r = 1). The DuckDB twin replays the
@@ -4596,7 +4598,8 @@ SQL_DEDUP_MINHASH_ML_REPLAY = _minhash_ml_replay_oracle_sql()
 
 def q_similarity_brp_ml_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The ml.feature BucketedRandomProjectionLSH hash chain,
-    driver-certified (VERDICT r12 #2): real BRP-LSH bucket ids over
+    driver-certified so that a Spark change to it fails a value
+    check: real BRP-LSH bucket ids over
     the embeddings table, collision-joined against the vec_id < 10
     query set — exactly the candidate generation ann_lsh_topk's
     approxSimilarityJoin performs, with the hash family replayed by
@@ -4664,7 +4667,7 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup pairs via banded fingerprint join (native
     bit-twiddling expressions; no Python).
 
-    Oracle-backed since round 3: the token hash is the first 15 hex
+    Oracle-backed: the token hash is the first 15 hex
     chars of md5 (engine-portable), the 64 bit-votes and fingerprint
     assembly are integer-exact, and 4-band pigeonhole blocking has
     FULL recall at hamming ≤ 3 — so the banded result set equals the
