@@ -6,9 +6,10 @@ re-expressed on :mod:`.table_format`.
 A **rollup view** is a grouped aggregate (COUNT + SUMs — the
 self-maintainable family; AVG derives as sum/count) materialized as its
 own lakehouse table. A **refresh** never re-scans the source snapshot:
-it reads the churn-proportional change-data-feed
-(:func:`.table_format.table_changes`, or its file-local change units)
-for the source versions since the last refresh, folds it into per-group *signed deltas*
+it reads the churn-proportional change-data-feed of the source
+versions since the last refresh (the plan ``table_format._change_units``
+builds, run by :func:`.table_format.table_changes` or, in the driver
+fold, with Arrow), folds it into per-group *signed deltas*
 (``inserted → +1``, ``deleted → −1``), and copy-on-write-merges those
 deltas into the view at file granularity — only view files whose
 [min,max] range on the leading group key overlaps the churned keys are
@@ -18,10 +19,11 @@ Cost model: a refresh is O(churned rows) to build the delta plus
 O(touched view files) to merge — never O(source) and never O(view).
 Two executors serve those two steps under one plan/commit/retry loop:
 
-* **Driver fold** (small feeds): when the range holds only append,
-  merge-on-read, compaction and exact-restore commits, the change units
-  (``table_format._change_units``) are read with pyarrow, key and
-  measure columns only, and summed with an Arrow group-by; the delta is
+* **Driver fold** (small feeds): when the plan of the range holds no
+  rewrite pair (no copy-on-write DML, view refresh or restore across a
+  rewrite), its change units are read with pyarrow
+  (``table_format._read_change_unit``), key and measure columns only,
+  and summed with an Arrow group-by; the delta is
   then summed into the candidate view rows and written as one parquet
   file with pyarrow. No Spark job: at a review batch's size a refresh
   is otherwise bound by the fixed cost of its six jobs, not by data.
@@ -48,8 +50,6 @@ and refresh is idempotent under optimistic-concurrency retries.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import StructType
@@ -582,10 +582,9 @@ def _driver_delta(state: dict, head: int):
     - integral and decimal measures, summed in ``decimal128(38, scale)``
       as :func:`_widen` sums them: an integer sum is exact in any
       order, a float sum depends on the order;
-    - a range of append, merge-on-read, compaction and exact-restore
-      commits, so each change unit reads alone (``_change_units``
-      raises on a rewrite, whose survivors would have to be cancelled
-      across files);
+    - a plan without a rewrite pair, so each change unit reads alone
+      (``table_format._file_local`` raises on a pair, whose survivors
+      would have to be cancelled across files);
     - change units of at most ``table_format._DRIVER_ROWS`` file rows.
     """
     import numpy as np
@@ -604,8 +603,8 @@ def _driver_delta(state: dict, head: int):
     ):
         return None
     try:
-        units = tfmt._change_units(state["src_root"], state["src_version"],
-                                   head)
+        units = tfmt._file_local(tfmt._change_units(
+            state["src_root"], state["src_version"], head))
     except ValueError:
         return None
     feed_rows = sum(u.rows for u in units)
@@ -661,9 +660,7 @@ def _driver_apply(view_root, cands, delta, keys, sum_cols, st, version,
         view_cols[_nn(c)] = f"_d_nn_{c}"
     old = [
         tfmt._read_change_unit(
-            tfmt.ChangeUnit("insert", os.path.join(view_root, a["path"]),
-                            version),
-            target,
+            tfmt.ChangeUnit("insert", version, view_root, a), target
         )
         for a in cands
     ]

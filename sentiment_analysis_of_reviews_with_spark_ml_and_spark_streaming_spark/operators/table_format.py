@@ -1,8 +1,7 @@
-"""A minimal lakehouse table format on plain parquet — the metadata
-layer ROADMAP item 2 deferred while the Delta/Iceberg jars are absent
-from this container.
-
-Same architecture the real formats use, re-expressed in ~300 lines:
+"""A lakehouse table format on plain parquet: a commit log, snapshots,
+merge-on-read deletion vectors and a change-data feed, with the
+architecture of Delta Lake and Iceberg and no dependency beyond
+pyspark and pyarrow.
 
 * **Commit log**: ``<root>/_log/{version:08d}.json`` — one JSON action
   record per commit, created with ``O_CREAT|O_EXCL`` so two writers
@@ -39,6 +38,12 @@ Same architecture the real formats use, re-expressed in ~300 lines:
   file (one sidecar read per file, never a chain) and row positions
   are parquet row indices (``_metadata.row_index``), so a file's DV
   survives unrelated commits untouched.
+* **Change-data feed**: one planner (:func:`_change_units`) turns a
+  version range into typed change units (inserted and deleted files,
+  DV diffs, rewrite pairs) and two executors run the plan:
+  :func:`table_changes` with Spark, and :func:`_read_change_unit` with
+  Arrow, one unit at a time, for the streaming CDF source and the
+  rollup driver fold.
 
 Driver-side metadata is proportional to file COUNT, not data bytes —
 the standard lakehouse trade; at 100 TB with ~1e5 files the replay is
@@ -1705,150 +1710,150 @@ _NOOP_ACTIONS = {"compact", "cluster", "index"}
 
 @dataclasses.dataclass(frozen=True)
 class ChangeUnit:
-    """One file-local piece of a change feed, readable on its own by
-    :func:`_read_change_unit`: a whole file inserted (minus ``dv_new``)
-    or deleted (minus its pre-commit ``dv_old``), the rows a commit newly
-    masks (``dv``: ``dv_new`` − ``dv_old``) or a restore un-masks
-    (``undv``: ``dv_old`` − ``dv_new``). Paths are absolute; ``rows`` is
-    the data file's row count, what reading the unit costs."""
+    """One typed step of a change-feed plan (:func:`_change_units`).
+    ``entry`` is a log entry read through its own DV: an ``insert``'s
+    add (minus its new DV) or a ``delete``'s pre-commit entry (minus its
+    old DV). A ``dv`` unit is the rows of ``entry``'s file that its new
+    DV masks beyond ``old`` (the pre-commit entry), an ``undv`` unit the
+    rows a restore un-masks. A ``rewrite`` pair holds a commit's add
+    entries (``adds``) and its removed files' pre-commit entries
+    (``removes``), whose surviving rows cancel only across files."""
 
-    kind: str  # "insert" | "delete" | "dv" | "undv"
-    path: str
+    kind: str  # "insert" | "delete" | "dv" | "undv" | "rewrite"
     version: int
-    rows: int = 0
-    dv_new: str | None = None
-    dv_old: str | None = None
+    root: str
+    entry: dict | None = None
+    old: dict | None = None
+    adds: tuple = ()
+    removes: tuple = ()
+    action: str = ""
 
     @property
     def deleted(self) -> bool:
         return self.kind in ("delete", "dv")
 
+    @property
+    def rows(self) -> int:
+        """The data-file rows that reading the unit costs."""
+        return sum(e.get("rows", 0)
+                   for e in (self.entry or {},) + self.adds + self.removes)
 
-def _range_has_rewrite(root: str, v_from: int, v_to: int) -> bool:
-    """True when any commit in (``v_from``, ``v_to``) rewrote surviving
-    rows into new files (compact/cluster/cow/ivm/nested restore) —
-    the only case where a restore's removed and re-added file sets can
-    share row content. Over a clean append/mor range, a restore's
-    head-only removes retract exactly the rows inserted in the range
-    and its target-only adds return exactly fully-dropped files, so
-    file-local change units stay multiset-exact."""
-    for u in range(v_from + 1, v_to):
-        r = _read_commit(root, u)
-        act = r.get("action")
-        if act in _NOOP_ACTIONS or act in ("restore", "ivm_refresh"):
-            return True
-        if act in ("delete", "merge", "update") and r.get(
-            "write_mode", "cow"
-        ) != "mor":
-            return True
-    return False
+    def flips(self):
+        """The row positions a ``dv`` unit newly masks or an ``undv``
+        unit un-masks: a set difference of two sidecars."""
+        import numpy as np
+
+        base = os.path.basename(self.entry["path"])
+        new = _dv_positions(_sidecar_path(self.root, self.entry), base)
+        old = _dv_positions(_sidecar_path(self.root, self.old), base)
+        if self.kind == "undv":
+            new, old = old, new
+        return np.setdiff1d(new, old)
+
+
+def _rewrites(rec: dict) -> bool:
+    """Whether commit ``rec`` wrote surviving rows into new files, so
+    that files it removes and adds, or that a later restore across it
+    drops and returns, can share row content: compaction, clustering,
+    copy-on-write DML, a view refresh that replaced files, and a restore
+    (it may itself span one). A bloom-index commit re-adds the same
+    paths and rewrites nothing. This is the feed's one rewrite test."""
+    act = rec.get("action")
+    if act == "ivm_refresh":
+        return bool(rec.get("add") or rec.get("remove"))
+    if act in ("delete", "merge", "update"):
+        return rec.get("write_mode", "cow") != "mor"
+    return act in ("compact", "cluster", "restore")
 
 
 def _change_units(root: str, v_from: int, v_to: int) -> list[ChangeUnit]:
-    """Plan the change feed of (``v_from``, ``v_to``] as file-local
-    :class:`ChangeUnit` s, from the log alone. Exact at file/sidecar
-    granularity, which holds precisely when mutations are merge-on-read:
-    a mor commit's adds are pure new rows and its deletions are full
-    files or DV diffs, so no cross-file multiset cancellation is ever
-    needed and each unit can be read independently. Copy-on-write
-    delete/merge/update and IVM refresh rewrite surviving rows into new
-    files, so those commits raise ``ValueError`` (the same contract as
-    Delta CDF without CDC files; :func:`table_changes` is the exact feed
-    for them). Data-identical commits (compact/cluster/index) are
-    skipped; restore commits are planned per path (a file drops or
-    returns whole, DV differences are sidecar set algebra both ways) and
-    raise only when the restore crosses a rewrite, where removed and
-    re-added files may share content."""
+    """The change feed of (``v_from``, ``v_to``] planned from the log
+    alone as :class:`ChangeUnit` s, walking each commit once against a
+    rolling pre-commit state. :func:`table_changes` runs the plan with
+    Spark; :func:`_read_change_unit` runs it with Arrow, one unit at a
+    time. Layout-only commits (:data:`_NOOP_ACTIONS`) plan nothing. A
+    merge-on-read commit plans file-local units, exact without any
+    cancellation: its adds are new rows, its removes whole files read
+    through their old DVs and its DV diffs fresh positions. A restore
+    plans per path: a file drops or returns whole, and a path on both
+    sides differs only in DV state (``dv`` and ``undv``). A commit whose
+    removed and added files can share rows (:func:`_rewrites`) plans
+    one rewrite pair; for a restore that is when it both drops and
+    returns files across a rewrite since its target version."""
     pre = (
         {a["path"]: a for a in snapshot_files(root, v_from)[0]}
         if v_from >= 0
         else {}
     )
-
-    def _abs(rel):
-        return os.path.join(root, rel) if rel else None
-
-    def _unit(kind, v, entry, *, new=None, old=None):
-        return ChangeUnit(
-            kind, _abs(entry["path"]), v, entry.get("rows", 0),
-            dv_new=_abs(new and new.get("sidecar")),
-            dv_old=_abs(old and old.get("sidecar")),
-        )
-
     units: list[ChangeUnit] = []
     for v in range(v_from + 1, v_to + 1):
         rec = _read_commit(root, v)
-        action = rec.get("action")
-        dv_items = rec.get("dv", {})
-        if action in _NOOP_ACTIONS:
-            pass  # zero logical change
-        elif action in ("delete", "merge", "update") and rec.get(
-            "write_mode", "cow"
-        ) != "mor":
-            raise ValueError(
-                f"commit {v} is a copy-on-write {action}: surviving rows "
-                "were rewritten into new files, so an exact row-level "
-                "change stream cannot be derived file-locally — write "
-                "with mode='mor' (deletion vectors) for streaming CDF, "
-                "or use table_changes() for the batch-exact feed"
+        act = rec.get("action")
+        adds = {a["path"]: a for a in rec.get("add", [])}
+        removed = {p: pre[p] for p in rec.get("remove", []) if p in pre}
+        both = adds.keys() & removed.keys()
+        if act == "restore":
+            pair = bool(adds.keys() - both and removed.keys() - both) and any(
+                _rewrites(_read_commit(root, u))
+                for u in range(rec.get("restore_of", 0) + 1, v)
             )
-        elif action == "ivm_refresh" and (rec.get("add") or rec.get("remove")):
-            raise ValueError(
-                f"commit {v} is a view maintenance rewrite; stream the "
-                "SOURCE table's change feed instead, or use "
-                "table_changes() on the view"
-            )
-        elif action == "restore":
-            # per-path exact: a path present on both sides differs only
-            # in DV state — the sidecar set-difference both ways.
-            rem_set = set(rec.get("remove", []))
-            add_by_path = {a["path"]: a for a in rec.get("add", [])}
-            both = rem_set & set(add_by_path)
-            head_only = rem_set - both
-            target_only = set(add_by_path) - both
-            if head_only and target_only and _range_has_rewrite(
-                root, rec.get("restore_of", 0), v
-            ):
-                raise ValueError(
-                    f"commit {v} restores across a rewrite "
-                    "(compact/cluster/cow/ivm): removed and re-added "
-                    "files may share row content, which a file-local "
-                    "stream cannot cancel — use table_changes() for "
-                    "this range"
-                )
-            for p in sorted(head_only):
-                if p in pre:
-                    units.append(_unit("delete", v, pre[p],
-                                       old=pre[p].get("dv")))
-            for p in sorted(target_only):
-                a = add_by_path[p]
-                units.append(_unit("insert", v, a, new=a.get("dv")))
-            for p in sorted(both):
-                a = add_by_path[p]
-                old = pre.get(p, {}).get("dv")
-                units.append(_unit("dv", v, a, new=a.get("dv"), old=old))
-                units.append(_unit("undv", v, a, new=a.get("dv"), old=old))
         else:
-            for p in rec.get("remove", []):
-                if p in pre:
-                    units.append(_unit("delete", v, pre[p],
-                                       old=pre[p].get("dv")))
-            for a in rec.get("add", []):
-                units.append(_unit("insert", v, a, new=a.get("dv")))
-            for p, d in dv_items.items():
-                if p in pre:
-                    units.append(_unit("dv", v, pre[p], new=d,
-                                       old=pre[p].get("dv")))
-        # roll pre-state forward
-        for p in rec.get("remove", []):
-            pre.pop(p, None)
-        for a in rec.get("add", []):
-            pre[a["path"]] = a
-        for p, d in dv_items.items():
+            pair = _rewrites(rec)
+        if act in _NOOP_ACTIONS:
+            pass
+        elif pair:
+            units.append(ChangeUnit(
+                "rewrite", v, root, adds=tuple(adds.values()),
+                removes=tuple(removed.values()), action=act,
+            ))
+        else:
+            units += [ChangeUnit("delete", v, root, e)
+                      for p, e in removed.items() if p not in both]
+            units += [ChangeUnit("insert", v, root, a)
+                      for p, a in adds.items() if p not in both]
+            units += [ChangeUnit(k, v, root, adds[p], removed[p])
+                      for p in sorted(both) for k in ("dv", "undv")]
+        for p in removed:
+            del pre[p]
+        pre.update(adds)
+        for p, d in rec.get("dv", {}).items():
             if p in pre:
-                pre[p] = {**pre[p],
-                          "dv": {"sidecar": d["sidecar"], "rows": d["rows"]}}
+                new = {**pre[p],
+                       "dv": {"sidecar": d["sidecar"], "rows": d["rows"]}}
+                units.append(ChangeUnit("dv", v, root, new, pre[p]))
+                pre[p] = new
     return units
+
+
+def _file_local(units: list[ChangeUnit]) -> list[ChangeUnit]:
+    """``units`` for the Arrow executor, which reads each unit alone
+    (:func:`_read_change_unit`). A rewrite pair's surviving rows cancel
+    only across files, so one raises ``ValueError``, the contract of
+    Delta CDF without CDC files; :func:`table_changes` is exact there."""
+    u = next((u for u in units if u.kind == "rewrite"), None)
+    if u is None:
+        return units
+    if u.action == "restore":
+        raise ValueError(
+            f"commit {u.version} restores across a rewrite "
+            "(compact/cluster/cow/ivm): removed and re-added "
+            "files may share row content, which a file-local "
+            "stream cannot cancel — use table_changes() for "
+            "this range"
+        )
+    if u.action == "ivm_refresh":
+        raise ValueError(
+            f"commit {u.version} is a view maintenance rewrite; stream the "
+            "SOURCE table's change feed instead, or use "
+            "table_changes() on the view"
+        )
+    raise ValueError(
+        f"commit {u.version} is a copy-on-write {u.action}: surviving rows "
+        "were rewritten into new files, so an exact row-level "
+        "change stream cannot be derived file-locally — write "
+        "with mode='mor' (deletion vectors) for streaming CDF, "
+        "or use table_changes() for the batch-exact feed"
+    )
 
 
 def _read_change_unit(unit: ChangeUnit, schema):
@@ -1861,25 +1866,18 @@ def _read_change_unit(unit: ChangeUnit, schema):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    pf = pq.ParquetFile(unit.path)
+    path = os.path.join(unit.root, unit.entry["path"])
+    pf = pq.ParquetFile(path)
     have = set(pf.schema_arrow.names)
     tbl = pf.read(columns=[f.name for f in schema if f.name in have])
-    base = os.path.basename(unit.path)
     if unit.kind in ("dv", "undv"):
-        new = _dv_positions(unit.dv_new, base)
-        old = _dv_positions(unit.dv_old, base)
-        mask = np.zeros(tbl.num_rows, dtype=bool)
-        mask[np.setdiff1d(new, old) if unit.kind == "dv"
-             else np.setdiff1d(old, new)] = True
-        tbl = tbl.filter(pa.array(mask))
-    else:
-        gone = _dv_positions(
-            unit.dv_new if unit.kind == "insert" else unit.dv_old, base
-        )
-        if len(gone):
-            mask = np.ones(tbl.num_rows, dtype=bool)
-            mask[gone] = False
-            tbl = tbl.filter(pa.array(mask))
+        tbl = tbl.take(unit.flips())
+    elif "dv" in unit.entry:
+        tbl = tbl.take(np.setdiff1d(
+            np.arange(tbl.num_rows),
+            _dv_positions(_sidecar_path(unit.root, unit.entry),
+                          os.path.basename(path)),
+        ))
     n = tbl.num_rows
     return pa.table(
         [tbl.column(f.name).cast(f.type) if f.name in have
@@ -1895,132 +1893,95 @@ def table_changes(
     changes per commit over (``v_from``, ``v_to``], each tagged with
     ``_commit_version`` and ``_change_type`` ∈ {inserted, deleted} —
     an update is one deleted + one inserted row at the same version.
-    Churn-proportional, never a snapshot re-scan: files carried across
-    a commit cancel in the multiset difference — elementwise
-    ``(C+A) ∸ (C+R) = A ∸ R`` — so each version reads ONLY its own
-    added/removed files. Every data file is immutable parquet, so the
-    feed is deterministic and replayable from any version.
+    Churn-proportional, never a snapshot re-scan: the Spark executor of
+    the plan :func:`_change_units` builds, reading only the files each
+    commit adds, removes or re-masks, and each commit's inserted files
+    in one :func:`read_files` and its deleted files in another. Every
+    data file is immutable parquet, so the feed is deterministic and
+    replayable from any version.
 
-    Deletion-vector commits (``mode="mor"`` merge, delete and update)
-    emit exactly the NEWLY masked rows: the commit's cumulative sidecar
-    minus the file's prior sidecar, diffed on the driver, gives the
-    fresh positions, and the data file is read once at those positions.
-    A later REMOVE of a DV'd file (compact, merge, cow delete) reads it
-    through its pre-commit DV, so rows already reported deleted are
-    never reported twice — the feed stays an exact multiset delta of
-    the logical table at every version. Layout-only commits (compact,
-    cluster) hold the same logical rows before and after, so they add
-    nothing to the feed and none of their files is read."""
+    - Deletion-vector positions a commit newly masks (``dv``) or a
+      restore un-masks (``undv``) are diffed on the driver, and their
+      files are read once, without their DVs, at those positions.
+    - A removed file is read through its pre-commit DV, so rows already
+      reported deleted are never reported twice.
+    - Merge-on-read commits are file-local and cancel nothing: a row a
+      MoR upsert writes back unchanged is one deleted and one inserted
+      row, whether the displaced file was removed whole or masked. The
+      feed is an exact signed multiset delta of the logical table.
+    - Copy-on-write DML, view refreshes and a restore across a rewrite
+      cancel their added against their removed files with
+      ``exceptAll``; a copy-on-write delete needs only the deleted side.
+    - Layout-only commits (compact, cluster, bloom index) hold the same
+      logical rows before and after: they add nothing and none of their
+      files is read."""
     head = latest_version(root)
     if not 0 <= v_from < v_to <= head:
         raise ValueError(
             f"need 0 <= v_from < v_to <= head({head}), "
             f"got ({v_from}, {v_to}]"
         )
+    import functools
+    import itertools
+
     import numpy as np
+    import pyarrow as pa
 
-    _live, schema = snapshot_files(root, v_to)
-    st = StructType.fromJson(schema)
-    base_cols = [F.col(f.name) for f in st.fields]
-    # rolling pre-commit state: removed paths and DV diffs need the
-    # entry (with its OLD deletion vector) as of the previous version.
-    pre = {a["path"]: a for a in snapshot_files(root, v_from)[0]}
+    st = StructType.fromJson(snapshot_files(root, v_to)[1])
+    units = _change_units(root, v_from, v_to)
 
-    def _side(entries: list[dict]) -> DataFrame:
-        if not entries:
-            return _empty_frame(spark, st)
-        return read_files(spark, root, entries, st)
+    def _read(entries) -> DataFrame:
+        return read_files(spark, root, list(entries), st)
 
-    def _roll_forward(rec: dict, dv_items: dict) -> None:
-        for p in rec.get("remove", []):
-            pre.pop(p, None)
-        for a in rec.get("add", []):
-            pre[a["path"]] = a
-        for p, d2 in dv_items.items():
-            if p in pre:
-                pre[p] = {
-                    **pre[p],
-                    "dv": {"sidecar": d2["sidecar"], "rows": d2["rows"]},
-                }
+    def _tag(df: DataFrame, change: str, v: int) -> DataFrame:
+        return df.withColumns({"_change_type": F.lit(change),
+                               "_commit_version": F.lit(v).cast("long")})
 
-    out = None
-    for v in range(v_from + 1, v_to + 1):
-        rec = _read_commit(root, v)
-        dv_items = {p: d2 for p, d2 in rec.get("dv", {}).items() if p in pre}
-        action = rec.get("action")
-        if action in ("compact", "cluster") and not rec.get("dv"):
-            # layout-only commits rewrite the SAME logical rows (DV
-            # masks applied on both sides), so their feed is empty:
-            # neither side is planned
-            _roll_forward(rec, dv_items)
-            continue
-        added_entries = rec.get("add", [])
-        removed_entries = [
-            pre[p] for p in rec.get("remove", []) if p in pre
-        ]
-        added = _side(added_entries)
-        removed = _side(removed_entries)
-        # exceptAll is a full-width multiset shuffle — only mixed
-        # add+remove commits (merge, cow delete rewrites) need the
-        # cancellation; append-only and remove-only commits get the
-        # identity short-circuit (exceptAll with an empty side IS the
-        # other side), so an append fold into an IVM refresh pays no
-        # shuffle
-        if not removed_entries:
-            d = added.withColumn("_change_type", F.lit("inserted"))
-        elif not added_entries:
-            d = removed.withColumn("_change_type", F.lit("deleted"))
-        elif action == "delete":
-            # copy-on-write delete: added files are survivor subsets
-            # of the removed files, so the inserted side is empty by
-            # construction — one exceptAll instead of two
-            d = removed.exceptAll(added).withColumn(
-                "_change_type", F.lit("deleted")
-            )
-        else:
-            d = (
-                added.exceptAll(removed)
-                .withColumn("_change_type", F.lit("inserted"))
-                .unionByName(
-                    removed.exceptAll(added)
-                    .withColumn("_change_type", F.lit("deleted"))
-                )
-            )
-        # rows newly masked by this commit: new sidecar − old sidecar,
-        # diffed on the driver and handed to Spark as a local relation
-        fresh = {}
-        for p, d2 in dv_items.items():
-            base = os.path.basename(p)
-            fresh[base] = np.setdiff1d(
-                _dv_positions(os.path.join(root, d2["sidecar"]), base),
-                _dv_positions(_sidecar_path(root, pre[p]), base),
-            )
-        fresh = _dv_table(fresh)
-        if fresh.num_rows:
-            # read the affected files WITHOUT their DV, positions on
-            data = spark.read.schema(st).parquet(
-                *(os.path.join(root, p) for p in dv_items)
-            ).select(*base_cols, _file_base_col(), _row_pos_col())
-            masked = (
-                data.join(
-                    F.broadcast(spark.createDataFrame(fresh)),
-                    (F.col("_file") == F.col("file"))
-                    & (F.col("_pos") == F.col("pos")),
-                    "left_semi",
-                )
-                .drop("_file", "_pos")
-                .withColumn("_change_type", F.lit("deleted"))
-            )
-            d = d.unionByName(masked)
-        d = d.withColumn("_commit_version", F.lit(v).cast("long"))
-        out = d if out is None else out.unionByName(d)
-        _roll_forward(rec, dv_items)
-    if out is None:  # every commit in the range was layout-only
-        out = _empty_frame(spark, st).withColumns({
-            "_change_type": F.lit("inserted"),
-            "_commit_version": F.lit(v_to).cast("long"),
-        })
-    return out
+    parts = []
+    for v, at in itertools.groupby(units, lambda u: u.version):
+        at = list(at)
+        for kind, change in (("insert", "inserted"), ("delete", "deleted")):
+            entries = [u.entry for u in at if u.kind == kind]
+            if entries:
+                parts.append(_tag(_read(entries), change, v))
+        for u in at:
+            if u.kind != "rewrite":
+                continue
+            # exceptAll is a full-width multiset shuffle; with one side
+            # empty the other side is the answer, and a copy-on-write
+            # delete's added files are survivors of its removed ones
+            added, removed = _read(u.adds), _read(u.removes)
+            if u.removes:
+                parts.append(_tag(removed.exceptAll(added) if u.adds
+                                  else removed, "deleted", v))
+            if u.adds and u.action != "delete":
+                parts.append(_tag(added.exceptAll(removed) if u.removes
+                                  else added, "inserted", v))
+    flips = [(u, u.flips()) for u in units if u.kind in ("dv", "undv")]
+    flips = [(u, pos) for u, pos in flips if len(pos)]
+    if flips:
+        # one semi-join of the re-masked files, read without their DVs,
+        # against the tagged positions as a broadcast local relation
+        n = [len(pos) for _, pos in flips]
+        marks = spark.createDataFrame(pa.table({
+            "file": np.repeat(
+                [os.path.basename(u.entry["path"]) for u, _ in flips], n),
+            "pos": np.concatenate([pos for _, pos in flips]),
+            "_change_type": np.repeat(
+                ["deleted" if u.deleted else "inserted" for u, _ in flips],
+                n),
+            "_commit_version": np.repeat([u.version for u, _ in flips], n),
+        }))
+        data = spark.read.schema(st).parquet(*dict.fromkeys(
+            os.path.join(root, u.entry["path"]) for u, _ in flips
+        )).select(*st.fieldNames(), _file_base_col(), _row_pos_col())
+        parts.append(data.join(
+            F.broadcast(marks),
+            (F.col("_file") == F.col("file")) & (F.col("_pos") == F.col("pos")),
+        ).drop("_file", "_pos", "file", "pos"))
+    if not parts:  # no commit in the range changed a row
+        return _tag(_empty_frame(spark, st), "inserted", v_to)
+    return functools.reduce(DataFrame.unionByName, parts)
 
 
 def table_diff(

@@ -1,44 +1,33 @@
-"""``spark.read``/``readStream`` ``.format("lakehouse")`` — a Python
-DataSource over the table-format commit log
-(operators/table_format.py), the streaming half of the Delta/Iceberg
-substitute (ROADMAP item 2; jars absent from this container).
+"""``spark.read``/``readStream`` ``.format("lakehouse")``: a Python
+DataSource over the commit log of :mod:`..operators.table_format`.
 
-Streaming contract (same as Delta's streaming source):
+The offset is the commit version, ``{"version": v}``. Data files are
+immutable, so any committed range replays byte-identically on recovery,
+the deterministic replay that exactly-once sinks need.
+``startingVersion`` (default: all history) or ``startingTimestamp``
+seats the first batch.
 
-* The offset IS the commit version — ``{"version": v}`` checkpoints a
-  position in the log, and every micro-batch is the set of files ADDED
-  by versions ``(start, end]``. Data files are immutable, so any
-  committed range replays byte-identically on failure recovery —
-  the deterministic-replay property exactly-once sinks require.
-* **Append-only by default**: a commit that REMOVES files (merge,
-  delete, compact, cluster) poisons a row-level stream, so the reader
-  raises unless ``ignoreChanges=true`` — in which case rewritten files
-  are re-emitted whole (downstream must dedupe on a key), exactly
-  Delta's documented ``ignoreChanges`` semantics.
-* ``startingVersion`` (default: all history) seats the first batch.
-* ``readChangeFeed=true`` switches to Delta's streaming CDF: each
-  micro-batch emits row-level ``_change_type`` ∈ {inserted, deleted}
-  for the commit range. Exactness is file/sidecar-local and therefore
-  requires MERGE-ON-READ mutations (deletion vectors): a mor commit's
-  adds are pure new rows and its deletes are whole files or DV diffs,
-  so every split reads independently — no cross-file multiset
-  cancellation. Copy-on-write delete/merge commits raise (their
-  rewritten survivors are ambiguous at file granularity — the same
-  contract as Delta CDF without CDC files; use ``table_changes`` for
-  the batch-exact feed); compact/cluster/index commits are skipped as
-  data-identical; RESTORE commits stream their exact per-path diff
-  (raising only when the restore crosses a rewrite).
+* **Append-only by default**, as Delta's streaming source: a micro-batch
+  is the files that versions ``(start, end]`` add. A commit that removes
+  files or masks rows (merge, delete, update, restore) would make such a
+  stream wrong, so it raises unless ``ignoreChanges=true``, which
+  re-emits rewritten files whole (downstream must dedupe on a key).
+  Re-emitting files is not a row-level change, so this mode walks the
+  log itself. Layout-only commits (compact, cluster, bloom index) are
+  skipped as data-identical.
+* ``readChangeFeed=true`` is Delta's streaming CDF: the batch reads the
+  change feed of ``(start, end]`` as planned by
+  ``table_format._change_units``, the same plan ``table_changes`` runs
+  with Spark. Each change unit becomes one input partition that a worker
+  reads alone with Arrow (``table_format._read_change_unit``), so a
+  backlog of many commits fans out as wide as the cluster. Reading a
+  unit alone is exact only when no rows cancel across files, so a plan
+  holding a rewrite pair (copy-on-write DML, a view refresh, a restore
+  across a rewrite) raises, as Delta CDF does without CDC files.
 
-Scale shape: one input partition per change unit (an added data file,
-a removed one, or a deletion-vector diff) — Spark schedules them
-across executors, each worker reads ONLY its file through Arrow
-(``pyarrow.parquet`` → ``RecordBatch`` yields, zero row-at-a-time
-Python), and a 1000-commit backlog fans out as wide as the cluster.
-The units are planned and read by ``table_format._change_units`` and
-``_read_change_unit``, the same code ``ivm.refresh_rollup`` folds small
-feeds with on the driver; this module only wraps each unit as a split.
-Every row is tagged ``_commit_version`` (batch reads derive it from
-the ``data/v{version:08d}-`` path prefix the writer stamps).
+Every row is tagged ``_commit_version``; a batch read of the live
+snapshot takes it from the ``data/v{version:08d}-`` prefix the writer
+stamps on each file's path.
 """
 
 from __future__ import annotations
@@ -51,7 +40,7 @@ from pyspark.sql.datasource import (
     DataSourceStreamReader,
     InputPartition,
 )
-from pyspark.sql.types import LongType, StructField, StructType
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from ..operators import table_format as tf
 
@@ -59,9 +48,11 @@ _VERSION_COL = "_commit_version"
 _CHANGE_COL = "_change_type"
 
 
-def _table_schema(root: str, cdf: bool = False) -> StructType:
-    from pyspark.sql.types import StringType
+def _flag(options, name: str) -> bool:
+    return str(options.get(name, "false")).lower() == "true"
 
+
+def _table_schema(root: str, cdf: bool = False) -> StructType:
     _live, schema = tf.snapshot_files(root)
     st = StructType.fromJson(schema)
     extra = (
@@ -72,14 +63,16 @@ def _table_schema(root: str, cdf: bool = False) -> StructType:
     )
 
 
-def _unit_batches(unit: tf.ChangeUnit, schema: StructType):
-    """Arrow-native read of one change unit (see
-    :func:`..operators.table_format._read_change_unit`) in the source's
-    ``schema``: the table's columns, ``_change_type`` when the schema
-    carries it (the change feed) and ``_commit_version``."""
+def _unit_batches(unit: tf.ChangeUnit | None, schema: StructType):
+    """Arrow-native read of one change unit in the source's ``schema``:
+    the table's columns, ``_change_type`` when the schema carries it
+    (the change feed) and ``_commit_version``. ``None`` is the empty
+    split Spark needs when a batch plans no unit."""
     import numpy as np
     import pyarrow as pa
 
+    if unit is None:
+        return
     tbl = tf._read_change_unit(unit, pa.schema([
         pa.field(f.name, _arrow_type(f.dataType))
         for f in schema.fields
@@ -112,21 +105,6 @@ def _arrow_type(dt):
         return pa.string()
 
 
-def _file_unit(root: str, entry: dict, version: int) -> tf.ChangeUnit:
-    """A live file, minus its deletion vector, as an insert unit."""
-    return tf.ChangeUnit(
-        "insert", os.path.join(root, entry["path"]), version,
-        entry.get("rows", 0), dv_new=tf._sidecar_path(root, entry),
-    )
-
-
-def _read_partition(partition, schema: StructType):
-    """Every split holds one change unit, or ``None`` for the empty
-    split Spark needs when a batch plans no file."""
-    if partition.value is not None:
-        yield from _unit_batches(partition.value, schema)
-
-
 class LakehouseBatchReader(DataSourceReader):
     def __init__(self, schema: StructType, options):
         self.root = options["path"]
@@ -136,36 +114,33 @@ class LakehouseBatchReader(DataSourceReader):
         live, _ = tf.snapshot_files(self.root)
         # data/v{version:08d}-{uuid}/part-... — writer-stamped
         parts = [
-            InputPartition(_file_unit(
-                self.root, a,
+            InputPartition(tf.ChangeUnit(
+                "insert",
                 int(os.path.basename(os.path.dirname(a["path"]))[1:9]),
+                self.root, a,
             ))
             for a in live
         ]
         return parts or [InputPartition(None)]
 
     def read(self, partition):
-        yield from _read_partition(partition, self.schema)
+        yield from _unit_batches(partition.value, self.schema)
 
 
 def _cdf_partitions(root: str, v_from: int, v_to: int) -> list[InputPartition]:
     """One split per change unit of (``v_from``, ``v_to``], planned on
-    the driver by :func:`..operators.table_format._change_units` — which
-    raises on copy-on-write and view-rewrite commits, the contract of a
-    file-local row-level stream."""
-    return [InputPartition(u) for u in tf._change_units(root, v_from, v_to)]
+    the driver (one empty split for an empty plan); a plan that holds a
+    rewrite pair raises ``ValueError`` (see ``table_format._file_local``)."""
+    units = tf._file_local(tf._change_units(root, v_from, v_to))
+    return [InputPartition(u) for u in units] or [InputPartition(None)]
 
 
 class LakehouseStreamReader(DataSourceStreamReader):
     def __init__(self, schema: StructType, options):
         self.root = options["path"]
         self.schema = schema
-        self.ignore_changes = (
-            str(options.get("ignorechanges", "false")).lower() == "true"
-        )
-        self.cdf = (
-            str(options.get("readchangefeed", "false")).lower() == "true"
-        )
+        self.ignore_changes = _flag(options, "ignorechanges")
+        self.cdf = _flag(options, "readchangefeed")
         if "startingtimestamp" in options:
             # Delta's startingTimestamp: emit every commit whose
             # (skew-adjusted) wall-clock is at or after the timestamp.
@@ -213,12 +188,11 @@ class LakehouseStreamReader(DataSourceStreamReader):
         # (start, start] batch — which must yield zero rows, not a
         # snapshot lookup at a version that doesn't exist yet.
         e = min(e, tf.latest_version(self.root))
-        # A range with zero units still needs one (empty) split: Spark
-        # requires at least one partition per planned batch.
+        # Spark needs at least one (possibly empty) split per batch
         if e <= s:
             return [InputPartition(None)]
         if self.cdf:
-            return _cdf_partitions(self.root, s, e) or [InputPartition(None)]
+            return _cdf_partitions(self.root, s, e)
         parts = []
         for v in range(s + 1, e + 1):
             rec = tf._read_commit(self.root, v)
@@ -238,12 +212,12 @@ class LakehouseStreamReader(DataSourceStreamReader):
                     "skip DV commits (downstream must dedupe), or "
                     "readChangeFeed=true for the exact row-level stream"
                 )
-            parts += [InputPartition(_file_unit(self.root, a, v))
+            parts += [InputPartition(tf.ChangeUnit("insert", v, self.root, a))
                       for a in rec.get("add", [])]
         return parts or [InputPartition(None)]
 
     def read(self, partition):
-        yield from _read_partition(partition, self.schema)
+        yield from _unit_batches(partition.value, self.schema)
 
     def commit(self, end: dict) -> None:
         pass  # log-backed source: nothing to release
@@ -262,14 +236,11 @@ class LakehouseTableDataSource(DataSource):
         return "lakehouse"
 
     def schema(self) -> StructType:
-        cdf = (
-            str(self.options.get("readchangefeed", "false")).lower()
-            == "true"
-        )
-        return _table_schema(self.options["path"], cdf=cdf)
+        return _table_schema(self.options["path"],
+                             cdf=_flag(self.options, "readchangefeed"))
 
     def reader(self, schema) -> LakehouseBatchReader:
-        if str(self.options.get("readchangefeed", "false")).lower() == "true":
+        if _flag(self.options, "readchangefeed"):
             raise ValueError(
                 "readChangeFeed is a STREAMING option here; for the "
                 "batch-exact feed (which also handles copy-on-write "
